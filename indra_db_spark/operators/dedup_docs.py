@@ -15,11 +15,14 @@ At 100 TB these are the workhorses of training-data curation. Shapes:
 
 Everything is deterministic (md5-derived hash families, no RNG state) and
 pure DataFrame ops — no row-at-a-time UDFs; the one Python surface is the
-vectorized Arrow run-length pair counter inside :func:`jaccard_pairs`
-(see its docstring for why a hash aggregate loses there).
+vectorized Arrow run-length pair counter :func:`_rle_count` behind
+:func:`jaccard_pairs` (see its docstring for why a hash aggregate loses
+there).
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -106,6 +109,75 @@ def word_shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     )
 
 
+def _rle_count(batches, threshold: float):
+    """(doc_a, doc_b, _nn) Arrow batches → one (doc_a, doc_b, n_common,
+    n_a, n_b) batch of the pairs that can reach ``threshold``.
+
+    Run-length count per partition: every occurrence of a pair is in
+    this partition (jaccard_pairs hash-repartitions on the pair), so the
+    local count IS the global |A∩B|. lexsort works for arbitrary int64
+    ids; n_a/n_b are constant per doc, so the run's first row carries
+    them. ``_nn`` packs n_a into the high and n_b into the low 32-bit
+    lane of one int64. The threshold PRE-filter (with a 1e-6 slack
+    strictly wider than the 5e-7 the 6-decimal round can lift a quotient)
+    keeps the Python→JVM conversion to the near-duplicate survivors
+    instead of every sharing pair (measured at sf1.0: 114M rows → ~10⁴);
+    Spark re-applies the EXACT rounded filter, so the slack never changes
+    the result.
+    """
+    import numpy as np
+    import pyarrow as pa_
+
+    # skip zero-row batches; a partition may deliver nothing else
+    chunks = [
+        [batch.column(i).to_numpy(zero_copy_only=False) for i in range(3)]
+        for batch in batches
+        if batch.num_rows
+    ]
+    if not chunks:
+        return
+    aa, bb, nn = (np.concatenate([c[i] for c in chunks]) for i in range(3))
+    # unpack the 32-bit size lanes (both positive < 2³¹, so the sign bit
+    # is never set and the uint64 view is exact). Only a view is exact: a
+    # cast from any other dtype goes through float64 and corrupts packed
+    # values ≥ 2⁵³.
+    assert nn.dtype == np.int64, nn.dtype
+    u = nn.view(np.uint64)
+    na = (u >> np.uint64(32)).astype(np.int64)
+    nb = (u & np.uint64(0xFFFFFFFF)).astype(np.int64)
+    # adaptive sort key: when both ids fit in uint32 (the common case
+    # for dense doc ids), one argsort of a packed uint64 is ~2× a
+    # two-array lexsort; arbitrary int64 ids take the general path.
+    # Run order within a pair is irrelevant (n_a/n_b are constant per
+    # doc), so a non-stable sort is fine.
+    if aa.min() >= 0 and bb.min() >= 0 and aa.max() < 2**31 and bb.max() < 2**31:
+        key = (aa.astype(np.uint64) << np.uint64(32)) | bb.astype(np.uint64)
+        order = np.argsort(key)
+    else:
+        order = np.lexsort((bb, aa))
+    aa = aa[order]
+    bb = bb[order]
+    change = np.empty(aa.shape[0], dtype=bool)
+    change[0] = True
+    np.logical_or(aa[1:] != aa[:-1], bb[1:] != bb[:-1], out=change[1:])
+    starts = np.flatnonzero(change)
+    counts = np.diff(np.append(starts, aa.shape[0]))
+    na = na[order][starts]
+    nb = nb[order][starts]
+    jac = counts / (na + nb - counts)
+    keep = jac >= threshold - 1e-6
+    yield pa_.RecordBatch.from_arrays(
+        [
+            pa_.array(aa[starts][keep]),
+            pa_.array(bb[starts][keep]),
+            pa_.array(counts[keep]),
+            pa_.array(na[keep]),
+            pa_.array(nb[keep]),
+        ],
+        ["doc_a", "doc_b", "n_common", "n_a", "n_b"],
+    )
+
+
 def jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -159,9 +231,6 @@ def jaccard_pairs(
     ``spark.sql.shuffle.partitions``; this exact-Jaccard operator is the
     oracle path — ``minhash_lsh_candidates`` is the 100 TB path).
     """
-    import numpy as np
-    import pyarrow as pa_
-
     words = F.split(_norm_text(text_col), " ")
     sizes = (
         fan_out(df.select(id_col, text_col))
@@ -212,72 +281,9 @@ def jaccard_pairs(
         .repartition("doc_a", "doc_b")
     )
 
-    def _rle_count(batches):
-        # run-length count per partition: every occurrence of a pair is in
-        # this partition (hash repartition above), so the local count IS
-        # the global |A∩B|. lexsort works for arbitrary int64 ids; n_a/n_b
-        # are constant per doc, so the run's first row carries them.
-        # The threshold PRE-filter (with a 1e-6 slack strictly wider than
-        # the 5e-7 the 6-decimal round can lift a quotient) keeps the
-        # Python→JVM conversion to the near-duplicate survivors instead
-        # of every sharing pair (measured at sf1.0: 114M rows → ~10⁴);
-        # Spark re-applies the EXACT rounded filter below, so the slack
-        # never changes the result.
-        chunks: list = []
-        for batch in batches:
-            chunks.append(
-                [batch.column(i).to_numpy(zero_copy_only=False) for i in range(3)]
-            )
-        if not chunks:
-            return
-        aa, bb, nn = (
-            np.concatenate([c[i] for c in chunks]) for i in range(3)
-        )
-        # unpack the 32-bit size lanes (both positive < 2³¹, so the sign
-        # bit is never set and the uint64 view is exact)
-        u = nn.view(np.uint64) if nn.dtype == np.int64 else nn.astype(np.uint64)
-        na = (u >> np.uint64(32)).astype(np.int64)
-        nb = (u & np.uint64(0xFFFFFFFF)).astype(np.int64)
-        # adaptive sort key: when both ids fit in uint32 (the common case
-        # for dense doc ids), one argsort of a packed uint64 is ~2× a
-        # two-array lexsort; arbitrary int64 ids take the general path.
-        # Run order within a pair is irrelevant (n_a/n_b are constant per
-        # doc), so a non-stable sort is fine.
-        if (
-            aa.size
-            and aa.min() >= 0
-            and bb.min() >= 0
-            and aa.max() < 2**31
-            and bb.max() < 2**31
-        ):
-            key = (aa.astype(np.uint64) << np.uint64(32)) | bb.astype(np.uint64)
-            order = np.argsort(key)
-        else:
-            order = np.lexsort((bb, aa))
-        aa = aa[order]
-        bb = bb[order]
-        change = np.empty(aa.shape[0], dtype=bool)
-        change[0] = True
-        np.logical_or(aa[1:] != aa[:-1], bb[1:] != bb[:-1], out=change[1:])
-        starts = np.flatnonzero(change)
-        counts = np.diff(np.append(starts, aa.shape[0]))
-        na = na[order][starts]
-        nb = nb[order][starts]
-        jac = counts / (na + nb - counts)
-        keep = jac >= threshold - 1e-6
-        yield pa_.RecordBatch.from_arrays(
-            [
-                pa_.array(aa[starts][keep]),
-                pa_.array(bb[starts][keep]),
-                pa_.array(counts[keep]),
-                pa_.array(na[keep]),
-                pa_.array(nb[keep]),
-            ],
-            ["doc_a", "doc_b", "n_common", "n_a", "n_b"],
-        )
-
     inter = pair_rows.mapInArrow(
-        _rle_count, "doc_a long, doc_b long, n_common long, n_a long, n_b long"
+        functools.partial(_rle_count, threshold=threshold),
+        "doc_a long, doc_b long, n_common long, n_a long, n_b long"
     )
     return (
         inter.withColumn(

@@ -7,15 +7,27 @@ Union, inversion ``~q``, EmptyQuery) compiled to SQLAlchemy selects over
 the readonly meta tables, returning mk_hash sets with (ev_count, belief,
 agent_count), hydrated into statements with per-statement ``ev_limit``.
 
-Here each Query node emits a **DataFrame of mk_hash** (a logical plan —
-Catalyst fuses the whole tree); composition rules:
+Here every leaf that reads only pa_statements compiles to a **row
+predicate** (``Query.predicate()`` → Column): HasAgent tests the
+``subj``/``obj`` struct sides directly, so no per-request name_meta
+posexplode, distinct or self-join is planned. Composition rules:
 
-  * Intersection → chained ``left_semi`` joins (hash-only, no payload
-    shuffle — cheaper than SQL INTERSECT on wide rows),
-  * Union → ``unionByName`` + drop-dup on the hash,
-  * inversion → ``left_anti`` against the corpus,
-  * leaves → column predicates over pa_statements / name_meta /
-    source_meta / evidence, all of which push down to parquet scans.
+  * Intersection → AND of its predicate children, one
+    ``pa_statements.where``; only children that read another table
+    (FromPapers, FromTopics, HasCuration, NotFlaggedIncorrect) are
+    still ``left_semi`` joined onto that filter,
+  * Union → OR (or ``unionByName`` + drop-dup on the hash when a child
+    reads another table),
+  * inversion → ``~coalesce(p, false)`` (or ``left_anti`` against the
+    corpus). The coalesce sits only under negation: a NULL predicate
+    already drops a row, and only negation would turn it TRUE, so
+    positive leaves keep their plain form and push down to the parquet
+    scan.
+
+``Query.matching(ctx)`` is the matching pa_statements rows — a filter
+for predicate queries, a semi-join otherwise — and every result mode
+(evaluate, get_statements, get_interactions and the groupings on top)
+starts from it.
 
 Every leaf is also **invertible** (reference: Query._inverted), and
 get_statements supports sort_by/limit/offset (W4) + ev_limit (W2).
@@ -23,9 +35,11 @@ get_statements supports sort_by/limit/offset (W4) + ev_limit (W2).
 
 from __future__ import annotations
 
+import functools
+import operator
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from indra_db_spark.operators.meta import KB_PREFIX
@@ -86,20 +100,18 @@ class QueryContext:
 
     pa_statements: DataFrame
     evidence: DataFrame
-    name_meta: DataFrame | None = None
     page_topics: DataFrame | None = None  # (url, topic_id) — MeSH-term analog
     page_concepts: DataFrame | None = None  # (url, topic_id) — MeSH-concept analog
     curations: DataFrame | None = None  # Curation-table analog
 
-    def agents(self) -> DataFrame:
-        if self.name_meta is not None:
-            return self.name_meta
-        from indra_db_spark.operators.meta import build_name_meta
-
-        return build_name_meta(self.pa_statements)
-
 
 class Query:
+    """A node of the query tree.
+
+    A subclass defines ``predicate()`` when it reads only pa_statements,
+    and ``hashes()`` (or ``matching()``) when it reads another table.
+    """
+
     def __and__(self, other: "Query") -> "Query":
         return Intersection([self, other])
 
@@ -109,15 +121,32 @@ class Query:
     def __invert__(self) -> "Query":
         return Not(self)
 
+    def predicate(self) -> Column | None:
+        """Row predicate over pa_statements — TRUE exactly on matching
+        rows — or None when the query reads another table."""
+        return None
+
     def hashes(self, ctx: QueryContext) -> DataFrame:
-        raise NotImplementedError
+        """mk_hash of every matching statement."""
+        p = self.predicate()
+        if p is None:
+            raise NotImplementedError(type(self).__name__)
+        return ctx.pa_statements.where(p).select("mk_hash")
+
+    def matching(self, ctx: QueryContext) -> DataFrame:
+        """The matching pa_statements rows: one filter for a predicate
+        query, a semi-join on ``hashes`` otherwise."""
+        p = self.predicate()
+        if p is not None:
+            return ctx.pa_statements.where(p)
+        return ctx.pa_statements.join(self.hashes(ctx), "mk_hash", "left_semi")
 
     # ---- result surface (QueryResult analog) ----
     def evaluate(self, ctx: QueryContext) -> DataFrame:
         """(mk_hash, ev_count, belief, agent_count) for matching stmts."""
-        return ctx.pa_statements.join(
-            self.hashes(ctx), "mk_hash", "left_semi"
-        ).select("mk_hash", "ev_count", "belief", "agent_count")
+        return self.matching(ctx).select(
+            "mk_hash", "ev_count", "belief", "agent_count"
+        )
 
     def get_statements(
         self,
@@ -142,7 +171,7 @@ class Query:
         for API parity but runs a global row_number window (single task
         over the matching set) — small result sets only.
         """
-        stmts = ctx.pa_statements.join(self.hashes(ctx), "mk_hash", "left_semi")
+        stmts = self.matching(ctx)
         if after is not None:
             last_sort, last_hash = after
             stmts = stmts.where(
@@ -241,7 +270,7 @@ class Query:
     def get_interactions(self, ctx: QueryContext) -> DataFrame:
         """Per-statement rows with agent keys + source map (hash grain)."""
         key = lambda a: F.concat_ws(":", F.col(f"{a}.db_ns"), F.col(f"{a}.db_id"))
-        return ctx.pa_statements.join(self.hashes(ctx), "mk_hash", "left_semi").select(
+        return self.matching(ctx).select(
             "mk_hash",
             key("subj").alias("subj_key"),
             key("obj").alias("obj_key"),
@@ -276,17 +305,34 @@ class Query:
         )
 
 
+def _all(preds: list[Column]) -> Column:
+    return functools.reduce(operator.and_, preds) if preds else F.lit(True)
+
+
+def _any(preds: list[Column]) -> Column:
+    return functools.reduce(operator.or_, preds) if preds else F.lit(False)
+
+
 @dataclass
 class EmptyQuery(Query):
     """Neutral element: matches everything (query.py::EmptyQuery)."""
 
-    def hashes(self, ctx: QueryContext) -> DataFrame:
-        return ctx.pa_statements.select("mk_hash")
+    def predicate(self) -> Column:
+        return F.lit(True)
+
+
+# agent position → its struct column on a pa_statements row
+_AGENT_SIDES = ("subj", "obj")
+_ROLE_NUM = {"SUBJECT": 0, "OBJECT": 1}
 
 
 @dataclass
 class HasAgent(Query):
-    """query.py::HasAgent — match on grounding or name, optional role."""
+    """query.py::HasAgent — match on grounding or name, optional role.
+
+    ``role``/``agent_num`` pick which of the ``subj``/``obj`` structs
+    the name/grounding test reads; a contradictory pair matches nothing.
+    """
 
     name: str | None = None
     namespace: str | None = None
@@ -294,7 +340,7 @@ class HasAgent(Query):
     role: str | None = None  # SUBJECT | OBJECT
     agent_num: int | None = None
 
-    def hashes(self, ctx: QueryContext) -> DataFrame:
+    def predicate(self) -> Column:
         if self.agent_num is not None and self.agent_num not in (0, 1):
             # the engine's statement model is strictly binary (subj/obj;
             # schemas.py two-agent invariant) — an out-of-range agent_num
@@ -303,19 +349,26 @@ class HasAgent(Query):
                 f"agent_num must be 0 (SUBJECT) or 1 (OBJECT) in the "
                 f"binary statement model, got {self.agent_num}"
             )
-        ag = ctx.agents()
-        cond = F.lit(True)
-        if self.name is not None:
-            cond &= F.col("name") == self.name
-        if self.namespace is not None:
-            cond &= F.col("db_ns") == self.namespace
-        if self.db_id is not None:
-            cond &= F.col("db_id") == self.db_id
+        nums = {0, 1}
         if self.role is not None:
-            cond &= F.col("role") == self.role
+            nums &= {_ROLE_NUM.get(self.role)}
         if self.agent_num is not None:
-            cond &= F.col("ag_num") == self.agent_num
-        return ag.where(cond).select("mk_hash").distinct()
+            nums &= {self.agent_num}
+        wanted = [
+            (f, v)
+            for f, v in (
+                ("name", self.name),
+                ("db_ns", self.namespace),
+                ("db_id", self.db_id),
+            )
+            if v is not None
+        ]
+        return _any(
+            [
+                _all([F.col(f"{_AGENT_SIDES[n]}.{f}") == v for f, v in wanted])
+                for n in sorted(nums)
+            ]
+        )
 
 
 @dataclass
@@ -323,19 +376,17 @@ class HasType(Query):
     types: list[str] = field(default_factory=list)
     include_subclasses: bool = False
 
-    def hashes(self, ctx: QueryContext) -> DataFrame:
+    def predicate(self) -> Column:
         types = type_closure(self.types) if self.include_subclasses else self.types
-        return ctx.pa_statements.where(F.col("type").isin(types)).select("mk_hash")
+        return F.col("type").isin(types)
 
 
 @dataclass
 class HasHash(Query):
     hashes_list: list[int] = field(default_factory=list)
 
-    def hashes(self, ctx: QueryContext) -> DataFrame:
-        return ctx.pa_statements.where(
-            F.col("mk_hash").isin(self.hashes_list)
-        ).select("mk_hash")
+    def predicate(self) -> Column:
+        return F.col("mk_hash").isin(self.hashes_list)
 
 
 @dataclass
@@ -344,22 +395,20 @@ class HasSources(Query):
 
     sources: list[str] = field(default_factory=list)
 
-    def hashes(self, ctx: QueryContext) -> DataFrame:
-        cond = F.lit(True)
-        for s in self.sources:
-            cond &= F.coalesce(F.col("src_counts")[s], F.lit(0)) > 0
-        return ctx.pa_statements.where(cond).select("mk_hash")
+    def predicate(self) -> Column:
+        return _all(
+            [F.coalesce(F.col("src_counts")[s], F.lit(0)) > 0 for s in self.sources]
+        )
 
 
 @dataclass
 class HasOnlySource(Query):
     source: str = ""
 
-    def hashes(self, ctx: QueryContext) -> DataFrame:
-        return ctx.pa_statements.where(
-            (F.size(F.map_keys("src_counts")) == 1)
-            & (F.coalesce(F.col("src_counts")[self.source], F.lit(0)) > 0)
-        ).select("mk_hash")
+    def predicate(self) -> Column:
+        return (F.size(F.map_keys("src_counts")) == 1) & (
+            F.coalesce(F.col("src_counts")[self.source], F.lit(0)) > 0
+        )
 
 
 def _src_flag(kb: bool):
@@ -370,34 +419,30 @@ def _src_flag(kb: bool):
 
 @dataclass
 class HasReadings(Query):
-    def hashes(self, ctx: QueryContext) -> DataFrame:
-        return ctx.pa_statements.where(_src_flag(False)).select("mk_hash")
+    def predicate(self) -> Column:
+        return _src_flag(False)
 
 
 @dataclass
 class HasDatabases(Query):
-    def hashes(self, ctx: QueryContext) -> DataFrame:
-        return ctx.pa_statements.where(_src_flag(True)).select("mk_hash")
+    def predicate(self) -> Column:
+        return _src_flag(True)
 
 
 @dataclass
 class HasNumAgents(Query):
     min_agents: int = 0
 
-    def hashes(self, ctx: QueryContext) -> DataFrame:
-        return ctx.pa_statements.where(
-            F.col("agent_count") >= self.min_agents
-        ).select("mk_hash")
+    def predicate(self) -> Column:
+        return F.col("agent_count") >= self.min_agents
 
 
 @dataclass
 class HasNumEvidence(Query):
     min_evidence: int = 0
 
-    def hashes(self, ctx: QueryContext) -> DataFrame:
-        return ctx.pa_statements.where(
-            F.col("ev_count") >= self.min_evidence
-        ).select("mk_hash")
+    def predicate(self) -> Column:
+        return F.col("ev_count") >= self.min_evidence
 
 
 @dataclass
@@ -499,43 +544,72 @@ class NotFlaggedIncorrect(Query):
 
 @dataclass
 class Intersection(Query):
+    """AND of the predicate children in one filter; each child that reads
+    another table is semi-joined onto it. The empty intersection is
+    trivially true — everything matches ([P] query.py Intersection)."""
+
     queries: list[Query] = field(default_factory=list)
 
-    def hashes(self, ctx: QueryContext) -> DataFrame:
-        if not self.queries:
-            # reference semantics: the empty intersection is trivially
-            # true — everything matches ([P] query.py Intersection)
-            return ctx.pa_statements.select("mk_hash").distinct()
-        dfs = [q.hashes(ctx) for q in self.queries]
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.join(d, "mk_hash", "left_semi")
+    def predicate(self) -> Column | None:
+        preds = [q.predicate() for q in self.queries]
+        if any(p is None for p in preds):
+            return None
+        return _all(preds)
+
+    def matching(self, ctx: QueryContext) -> DataFrame:
+        preds = [q.predicate() for q in self.queries]
+        out = ctx.pa_statements.where(_all([p for p in preds if p is not None]))
+        for q, p in zip(self.queries, preds):
+            if p is None:
+                out = out.join(q.hashes(ctx), "mk_hash", "left_semi")
         return out
+
+    def hashes(self, ctx: QueryContext) -> DataFrame:
+        return self.matching(ctx).select("mk_hash")
 
 
 @dataclass
 class Union(Query):
+    """OR of the predicate children; children that read another table are
+    unioned on the hash. The empty disjunction is the EMPTY SET — the dual
+    of Intersection([]) == everything (De Morgan: ~Union([]) ==
+    Intersection([]))."""
+
     queries: list[Query] = field(default_factory=list)
 
+    def predicate(self) -> Column | None:
+        preds = [q.predicate() for q in self.queries]
+        if any(p is None for p in preds):
+            return None
+        return _any(preds)
+
     def hashes(self, ctx: QueryContext) -> DataFrame:
-        if not self.queries:
-            # The empty disjunction is the EMPTY SET — the dual of
-            # Intersection([]) == everything. (r2 returned
-            # EmptyQuery().hashes(), i.e. everything, contradicting its
-            # own comment; fixed per the De Morgan duality
-            # ~Union([]) == Intersection([]).)
-            return ctx.pa_statements.select("mk_hash").limit(0)
-        out = self.queries[0].hashes(ctx)
-        for q in self.queries[1:]:
+        preds = [q.predicate() for q in self.queries]
+        out = ctx.pa_statements.where(
+            _any([p for p in preds if p is not None])
+        ).select("mk_hash")
+        rest = [q for q, p in zip(self.queries, preds) if p is None]
+        for q in rest:
             out = out.unionByName(q.hashes(ctx))
-        return out.dropDuplicates(["mk_hash"])
+        return out.dropDuplicates(["mk_hash"]) if rest else out
 
 
 @dataclass
 class Not(Query):
+    """Complement within the corpus. A NULL predicate is not a match, so
+    it must count as FALSE before negation (three-valued logic)."""
+
     query: Query = None  # type: ignore[assignment]
 
+    def predicate(self) -> Column | None:
+        p = self.query.predicate()
+        return None if p is None else ~F.coalesce(p, F.lit(False))
+
+    def matching(self, ctx: QueryContext) -> DataFrame:
+        p = self.predicate()
+        if p is not None:
+            return ctx.pa_statements.where(p)
+        return ctx.pa_statements.join(self.query.hashes(ctx), "mk_hash", "left_anti")
+
     def hashes(self, ctx: QueryContext) -> DataFrame:
-        return ctx.pa_statements.select("mk_hash").join(
-            self.query.hashes(ctx), "mk_hash", "left_anti"
-        )
+        return self.matching(ctx).select("mk_hash")

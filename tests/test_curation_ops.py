@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from indra_db_spark.operators.dedup_docs import (
+    _rle_count,
     exact_duplicates,
     jaccard_pairs,
     minhash_lsh_candidates,
@@ -57,6 +58,68 @@ def test_jaccard_near_dups(spark, docs):
     assert math.isclose(pairs[(1, 3)], 0.75, abs_tol=1e-6)
     exact = [p for p in pairs if pairs[p] == 1.0]
     assert set(exact) == {(1, 2), (1, 6), (2, 6)}
+
+
+def _pair_batch(rows, nn_type=None):
+    """(doc_a, doc_b, n_a, n_b) rows → the packed batch jaccard_pairs
+    feeds its run-length counter."""
+    import pyarrow as pa
+
+    a, b, na, nb = (list(c) for c in zip(*rows)) if rows else ([], [], [], [])
+    nn = [(x << 32) + y for x, y in zip(na, nb)]
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array(a, pa.int64()),
+            pa.array(b, pa.int64()),
+            pa.array(nn, nn_type or pa.int64()),
+        ],
+        ["doc_a", "doc_b", "_nn"],
+    )
+
+
+def _rle_rows(batches, threshold):
+    import pyarrow as pa
+
+    return pa.Table.from_batches(list(_rle_count(batches, threshold))).to_pylist()
+
+
+def test_rle_count_empty_batches():
+    assert list(_rle_count(iter([]), 0.5)) == []
+    # a partition that delivers only zero-row batches
+    assert list(_rle_count([_pair_batch([]), _pair_batch([])], 0.5)) == []
+
+
+def test_rle_count_across_batches():
+    # (1, 2) occurs in three batches (|A∩B| = 3 of 3+3 → J = 1); (1, 3)
+    # once (J = 1/5, under the threshold); (7, 9) twice in one batch
+    # (J = 2/(2+4-2) = 0.5)
+    batches = [
+        _pair_batch([(1, 2, 3, 3), (7, 9, 2, 4), (1, 3, 3, 3)]),
+        _pair_batch([(1, 2, 3, 3)]),
+        _pair_batch([]),
+        _pair_batch([(7, 9, 2, 4), (1, 2, 3, 3)]),
+    ]
+    got = sorted(_rle_rows(batches, 0.5), key=lambda r: (r["doc_a"], r["doc_b"]))
+    assert got == [
+        {"doc_a": 1, "doc_b": 2, "n_common": 3, "n_a": 3, "n_b": 3},
+        {"doc_a": 7, "doc_b": 9, "n_common": 2, "n_a": 2, "n_b": 4},
+    ]
+
+
+def test_rle_count_packed_sizes_near_2_31():
+    import pyarrow as pa
+
+    # packed values near 2^63: a float64 round trip would corrupt them
+    big = 2**31 - 1
+    rows = [(5, 6, big, big - 1), (5, 6, big, big - 1), (2**40, 3, big - 2, 1)]
+    got = sorted(_rle_rows([_pair_batch(rows)], 0.0), key=lambda r: r["doc_b"])
+    assert [(r["doc_a"], r["doc_b"], r["n_common"], r["n_a"], r["n_b"]) for r in got] == [
+        (2**40, 3, 1, big - 2, 1),
+        (5, 6, 2, big, big - 1),
+    ]
+    # only an exact int64 view unpacks the lanes; other dtypes are refused
+    with pytest.raises(AssertionError):
+        list(_rle_count([_pair_batch(rows, pa.uint64())], 0.0))
 
 
 def test_minhash_lsh_finds_near_dups(spark, docs):

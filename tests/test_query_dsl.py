@@ -2,6 +2,9 @@
 pattern: build a tiny corpus, assert the exact hash set per query,
 compose with & | ~."""
 
+import functools
+import operator
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -309,16 +312,36 @@ def test_keyset_pagination_equals_offset(ctx):
     assert [r["mk_hash"] for r in key2] == [r["mk_hash"] for r in off2]
 
 
+def _plan_nodes(plan):
+    """Pre-order walk of a Catalyst plan tree (JVM objects via py4j)."""
+    yield plan
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def _is_join(node, join_type):
+    return node.nodeName() == "Join" and node.joinType().toString() == join_type
+
+
 def test_get_statements_hydration_is_selection_scoped(ctx):
     """The evidence aggregate must run AFTER a semi-join on the selected
     hashes — hydrating a limited page must not aggregate the full evidence
     table (scale guard: 10^9 evidence rows / 25 statements)."""
     q = HasType(["Activation"])
     df = q.get_statements(ctx, ev_limit=2, limit=5)
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    # the evidence side carries its own LeftSemi (statement side has one
-    # too) — at least two semi joins in the optimized plan
-    assert plan.count("LeftSemi") >= 2, plan
+    plan = df._jdf.queryExecution().optimizedPlan()
+    # the evidence branch's collect_list aggregate sits above a LeftSemi
+    # whose right side is the selected (limited) page of hashes
+    agg = next(
+        n
+        for n in _plan_nodes(plan)
+        if n.nodeName() == "Aggregate"
+        and "collect_list" in n.aggregateExpressions().toString()
+    )
+    semis = [n for n in _plan_nodes(agg) if _is_join(n, "LeftSemi")]
+    assert semis, plan.toString()
+    assert any("Limit" in n.right().toString() for n in semis), plan.toString()
     # results identical to the unscoped reference formulation
     ref_ev = ctx.evidence.join(df.select("mk_hash"), "mk_hash", "left_semi")
     got = {
@@ -378,3 +401,224 @@ def test_extended_type_closure():
     }
     assert "Sumoylation" in type_closure(["AddModification"])
     assert "Desumoylation" in type_closure(["RemoveModification"])
+
+
+# ---- predicate compilation vs the reference join formulation ----
+
+def _reference_hashes(q, ctx):
+    """Reference join formulation of ``q``'s hash set: HasAgent over a
+    posexploded name_meta + distinct, the other pa_statements leaves as
+    filtered hash sets, Intersection as chained semi-joins, Union as a
+    de-duplicated union, Not as an anti-join against the corpus."""
+    from indra_db_spark.operators.meta import build_name_meta
+    from indra_db_spark.plans.query import HasNumAgents, Intersection, Not, Union
+
+    pa = ctx.pa_statements
+    corpus = pa.select("mk_hash")
+    if isinstance(q, EmptyQuery):
+        return corpus
+    if isinstance(q, HasAgent):
+        cond = F.lit(True)
+        for col, v in (
+            ("name", q.name), ("db_ns", q.namespace), ("db_id", q.db_id),
+            ("role", q.role), ("ag_num", q.agent_num),
+        ):
+            if v is not None:
+                cond &= F.col(col) == v
+        return build_name_meta(pa).where(cond).select("mk_hash").distinct()
+    leaf_conds = {
+        HasType: lambda q: F.col("type").isin(
+            type_closure(q.types) if q.include_subclasses else q.types
+        ),
+        HasHash: lambda q: F.col("mk_hash").isin(q.hashes_list),
+        HasSources: lambda q: functools.reduce(
+            operator.and_,
+            [F.coalesce(F.col("src_counts")[s], F.lit(0)) > 0 for s in q.sources],
+            F.lit(True),
+        ),
+        HasOnlySource: lambda q: (F.size(F.map_keys("src_counts")) == 1)
+        & (F.coalesce(F.col("src_counts")[q.source], F.lit(0)) > 0),
+        HasReadings: lambda q: F.exists(
+            F.map_keys("src_counts"), lambda s: ~s.startswith("kb_")
+        ),
+        HasDatabases: lambda q: F.exists(
+            F.map_keys("src_counts"), lambda s: s.startswith("kb_")
+        ),
+        HasNumAgents: lambda q: F.col("agent_count") >= q.min_agents,
+        HasNumEvidence: lambda q: F.col("ev_count") >= q.min_evidence,
+    }
+    if type(q) in leaf_conds:
+        return pa.where(leaf_conds[type(q)](q)).select("mk_hash")
+    if isinstance(q, Intersection):
+        if not q.queries:
+            return corpus.distinct()
+        out = _reference_hashes(q.queries[0], ctx)
+        for sub in q.queries[1:]:
+            out = out.join(_reference_hashes(sub, ctx), "mk_hash", "left_semi")
+        return out
+    if isinstance(q, Union):
+        if not q.queries:
+            return corpus.limit(0)
+        out = _reference_hashes(q.queries[0], ctx)
+        for sub in q.queries[1:]:
+            out = out.unionByName(_reference_hashes(sub, ctx))
+        return out.dropDuplicates(["mk_hash"])
+    if isinstance(q, Not):
+        return corpus.join(_reference_hashes(q.query, ctx), "mk_hash", "left_anti")
+    # leaves over other tables (FromPapers, ...) compile as they always did
+    return q.hashes(ctx)
+
+
+NULL_ROW_HASH = 1  # an extra statement whose agent, map and counts are NULL
+
+
+@pytest.fixture(scope="module")
+def null_ctx(spark, ctx):
+    """ctx plus one statement with a NULL subj, a NULL obj name, a NULL
+    src_counts map and NULL counts — the rows three-valued logic decides."""
+    assert ctx.pa_statements.where(F.col("mk_hash") == NULL_ROW_HASH).count() == 0
+    row = spark.createDataFrame(
+        [
+            {
+                "mk_hash": NULL_ROW_HASH,
+                "matches_key": "Activation(None, HGNC:10001)",
+                "type": "Activation",
+                "subj": None,
+                "obj": {"db_ns": "HGNC", "db_id": "10001", "name": None},
+                "mods": None,
+                "ev_count": None,
+                "src_counts": None,
+                "belief": None,
+                "agent_count": None,
+            }
+        ],
+        schemas.PA_STATEMENTS,
+    )
+    # one partition each: the corpus is ~300 rows, and the test runs ~80
+    # small jobs whose cost is per task
+    return QueryContext(
+        pa_statements=ctx.pa_statements.unionByName(row).coalesce(1).cache(),
+        evidence=ctx.evidence.coalesce(1).cache(),
+    )
+
+
+def test_predicate_compilation_matches_join_formulation(null_ctx):
+    from indra_db_spark.plans.query import HasNumAgents, Intersection, Union
+
+    ctx = null_ctx
+    url = ctx.evidence.select("url").first()["url"]
+    some = sorted(_hashes(HasType(["Complex"]), ctx))[:3] + [NULL_ROW_HASH]
+    tp53 = HasAgent(name="TP53")
+    hgnc = HasAgent(namespace="HGNC", db_id="11998")
+    act = HasType(["Activation"])
+    heavy = HasNumEvidence(3)
+    papers = FromPapers([url])
+    leaves = [
+        EmptyQuery(),
+        tp53,
+        hgnc,
+        HasAgent(name="TP53", role="SUBJECT"),
+        HasAgent(name="MDM2", role="OBJECT"),
+        HasAgent(name="MDM2", agent_num=1),
+        HasAgent(namespace="HGNC", db_id="10001", agent_num=0),
+        HasAgent(name="TP53", role="SUBJECT", agent_num=1),  # contradictory
+        HasAgent(role="OBJECT"),
+        act,
+        HasType(["RegulateActivity"], include_subclasses=True),
+        HasHash(some),
+        HasSources(["kb_signor"]),
+        HasSources(["no_such_source"]),
+        HasOnlySource("kb_signor"),
+        HasReadings(),
+        HasDatabases(),
+        HasNumAgents(2),
+        heavy,
+        papers,
+    ]
+    composed = [
+        tp53 & act,
+        hgnc | act,
+        ~hgnc,
+        ~~hgnc,
+        ~(hgnc | act),
+        ~hgnc & ~act,
+        (tp53 & ~act) | heavy,
+        # NULL under negation: a missing map, a missing count, a NULL name
+        ~HasReadings(),
+        ~HasDatabases() & act,
+        ~heavy,
+        ~HasAgent(name="MDM2", role="OBJECT"),
+        ~(HasSources(["no_such_source"]) | HasOnlySource("kb_signor")),
+        # leaves over another table mixed into the predicate tree
+        papers & tp53,
+        papers & ~act & HasNumEvidence(2),
+        papers | act,
+        ~papers & act,
+        ~(papers | hgnc),
+        # the set-op identities
+        Intersection([]),
+        Union([]),
+        ~Intersection([]),
+        ~Union([]),
+        Intersection([Union([]), tp53]),
+        Union([Intersection([]), papers]),
+    ]
+    for q in leaves + composed:
+        want = {r["mk_hash"] for r in _reference_hashes(q, ctx).collect()}
+        assert _hashes(q, ctx) == want, q
+    # the NULL row is outside every positive leaf and inside their negation
+    assert NULL_ROW_HASH in _hashes(~HasReadings(), ctx)
+    assert NULL_ROW_HASH not in _hashes(HasReadings(), ctx)
+
+
+def test_served_statement_side_is_one_filter(spark, ctx, tmp_path_factory):
+    """A conjunctive request over pa_statements leaves plans as one
+    filtered scan: no name_meta Generate, no join on the statement side,
+    and the positive leaves pushed into the parquet scan."""
+    from indra_db_spark.api import parse_query
+
+    root = tmp_path_factory.mktemp("served")
+    ctx.pa_statements.write.parquet(str(root / "pa"))
+    ctx.evidence.write.parquet(str(root / "ev"))
+    pq = QueryContext(
+        pa_statements=spark.read.parquet(str(root / "pa")),
+        evidence=spark.read.parquet(str(root / "ev")),
+    )
+    q = parse_query(
+        {
+            "subject": "TP53",
+            "object": "MDM2!",
+            "type": "RegulateActivity",
+            "type_subclasses": "true",
+            "min_evidence": 2,
+        }
+    )
+    df = q.get_statements(pq, limit=20)
+    qe = df._jdf.queryExecution()
+    opt = qe.optimizedPlan()
+    assert "Generate" not in opt.toString(), opt.toString()
+    hydration = next(n for n in _plan_nodes(opt) if _is_join(n, "LeftOuter"))
+    stmt_side = hydration.left()
+    assert not any(n.nodeName() == "Join" for n in _plan_nodes(stmt_side)), (
+        stmt_side.toString()
+    )
+    # the statement page is scanned twice: once for the rows, once as the
+    # hash set the evidence hydration semi-joins on
+    scans = [
+        n.metadata().apply("PushedFilters")
+        for n in _plan_nodes(qe.sparkPlan())
+        if n.nodeName() == "Scan parquet "
+        and n.metadata().apply("Location").endswith("/pa]")
+    ]
+    assert scans, qe.sparkPlan().toString()
+    for pushed in scans:
+        for leaf in (
+            "EqualTo(subj.name,TP53)",
+            "In(type, [Activation,Inhibition,RegulateActivity])",
+            "GreaterThanOrEqual(ev_count,2)",
+        ):
+            assert leaf in pushed, pushed
+    # and the filter answers the same as the join formulation
+    want = {r["mk_hash"] for r in _reference_hashes(q, pq).collect()}
+    got = [r["mk_hash"] for r in df.collect()]
+    assert set(got) <= want and len(got) == min(20, len(want))
