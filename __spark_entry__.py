@@ -23,6 +23,12 @@ from pyspark.sql import types as T
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from indra_db_spark.functions.parallel import (  # noqa: E402
+    fan_out,
+    pin_above_exchange,
+    sort_barrier,
+)
+
 _TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -111,8 +117,6 @@ def _q_filter_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C-family: 5-way star equi-join with small-dim broadcasts."""
-    from indra_db_spark.functions.parallel import fan_out
-
     # project the fact side to the three used columns and floor its scan
     # parallelism (the 6-row-group file caps the probe stage at 6 tasks)
     li = fan_out(
@@ -216,14 +220,12 @@ def _q_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("l_suppkey").orderBy(
         F.desc("l_extendedprice"), F.asc("l_orderkey"), F.asc("l_linenumber")
     )
-    return (
+    top = (
         li.withColumn("rnk", F.row_number().over(w))
         .where(F.col("rnk") <= 3)
         .select("l_suppkey", "rnk", "l_orderkey", "l_linenumber", "l_extendedprice")
-        # pre-sort barrier: see _q_docs_repetition
-        .repartition("l_suppkey")
-        .orderBy("l_suppkey", "rnk")
     )
+    return sort_barrier(top, "l_suppkey", "rnk")
 
 
 def _q_window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -236,12 +238,12 @@ def _q_window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("o_orderdate", "o_orderkey")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    return o.select(
+    running = o.select(
         "o_custkey",
         "o_orderkey",
         F.round(F.sum("o_totalprice").over(w), 2).alias("running_total"),
-        # pre-sort barrier: see _q_docs_repetition
-    ).repartition("o_custkey").orderBy("o_custkey", "o_orderkey")
+    )
+    return sort_barrier(running, "o_custkey", "o_orderkey")
 
 
 def _q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -262,34 +264,17 @@ def _q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_scalar_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G-family: regexp extraction, JSON access, date trunc, hashing-free."""
-    from indra_db_spark.functions.parallel import fan_out
-
     # get_json_object per row is the cost; the events table arrives as a
     # single parquet row group, so floor the scan parallelism first.
     ev = fan_out(_load(spark, sf_dir, "events"))
-    # The always-false nondeterministic disjunct pins the filter ABOVE the
-    # fan_out exchange: Catalyst otherwise pushes the
-    # isnotnull(get_json_object(..)) predicate below the repartition to
-    # the single-task scan, evaluating the JSON parse of the whole table
-    # on one core (plan-verified; the guide §4.4 barrier, applied to a
-    # built-in). monotonically_increasing_id() is non-negative by
-    # construction, so the predicate's value is unchanged row-for-row.
-    never = F.monotonically_increasing_id() < F.lit(0)
-    return (
-        ev.select(
-            "event_id",
-            F.get_json_object("props", "$.k").cast("long").alias("prop_k"),
-            F.date_trunc("month", "ts").cast("date").alias("month"),
-            F.upper("event_type").alias("etype"),
-            F.length("props").alias("props_len"),
-        )
-        .where(F.col("prop_k").isNotNull() | never)
-        # pre-sort barrier (see _q_docs_repetition): the range partitioner
-        # samples its child by executing it — without this the JSON parse
-        # of the whole table runs twice (sampling pass + real sort).
-        .repartition("event_id")
-        .orderBy("event_id")
-    )
+    parsed = ev.select(
+        "event_id",
+        F.get_json_object("props", "$.k").cast("long").alias("prop_k"),
+        F.date_trunc("month", "ts").cast("date").alias("month"),
+        F.upper("event_type").alias("etype"),
+        F.length("props").alias("props_len"),
+    ).where(pin_above_exchange(F.col("prop_k").isNotNull()))
+    return sort_barrier(parsed, "event_id")
 
 
 def _q_mk_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -308,7 +293,6 @@ def _q_docs_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalized-content fingerprint (drivers' documents carry few exact
     dups, so the kept-set form keeps the check non-vacuous)."""
     from indra_db_spark.functions.hashing import fold_md5_64
-    from indra_db_spark.functions.parallel import fan_out
 
     d = fan_out(_load(spark, sf_dir, "documents"))
     norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
@@ -325,17 +309,11 @@ def _q_docs_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from indra_db_spark.operators.textops import quality_features
 
     d = _load(spark, sf_dir, "documents")
-    return (
-        quality_features(d)
-        .select(
-            "doc_id", "n_tokens", "punct_ratio", "upper_ratio",
-            "stopword_ratio", "quality_score",
-        )
-        # pre-sort barrier (see _q_docs_repetition): without it the range
-        # sampler re-runs the whole regexp feature projection a 2nd time.
-        .repartition("doc_id")
-        .orderBy("doc_id")
+    feats = quality_features(d).select(
+        "doc_id", "n_tokens", "punct_ratio", "upper_ratio",
+        "stopword_ratio", "quality_score",
     )
+    return sort_barrier(feats, "doc_id")
 
 
 def _q_docs_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -458,13 +436,7 @@ def _q_embeddings_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from indra_db_spark.operators.similarity import cosine_near_dup_pairs
 
     e = _load(spark, sf_dir, "embeddings")
-    # pre-sort barrier (see _q_docs_repetition): without it the orderBy's
-    # range sampling re-runs the whole GEMM stage a second time
-    return (
-        cosine_near_dup_pairs(e, threshold=0.45)
-        .repartition("vec_a")
-        .orderBy("vec_a", "vec_b")
-    )
+    return sort_barrier(cosine_near_dup_pairs(e, threshold=0.45), "vec_a", "vec_b")
 
 
 def _q_docs_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -473,15 +445,14 @@ def _q_docs_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         bpe_ish_token_count,
         ws_token_count,
     )
-    from indra_db_spark.functions.parallel import fan_out
 
     d = fan_out(_load(spark, sf_dir, "documents"))
-    # pre-sort barrier: see _q_docs_repetition
-    return d.select(
+    counts = d.select(
         "doc_id",
         ws_token_count(F.col("text")).alias("n_ws_tokens"),
         bpe_ish_token_count(F.col("text")).cast("long").alias("n_bpe_tokens"),
-    ).repartition("doc_id").orderBy("doc_id")
+    )
+    return sort_barrier(counts, "doc_id")
 
 
 # --- pipeline-specific (rows-only where SQL can't express) -----------------
@@ -693,13 +664,8 @@ def _q_docs_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     from indra_db_spark.operators.textops import repetition_ratios
 
     d = _load(spark, sf_dir, "documents")
-    # repartition before the sort: the range partitioner SAMPLES its child
-    # by executing it, so without this barrier the whole HOF tail runs
-    # twice (once for sampling, once for the real sort) — the cheap hash
-    # exchange materializes the result and the sample re-reads only that.
-    return repetition_ratios(d).select(
-        "doc_id", "dup_line_frac", "dup_3gram_frac"
-    ).repartition("doc_id").orderBy("doc_id")
+    ratios = repetition_ratios(d).select("doc_id", "dup_line_frac", "dup_3gram_frac")
+    return sort_barrier(ratios, "doc_id")
 
 
 def _q_urls_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -758,11 +724,11 @@ def _q_docs_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring(F.col("text"), 1, 40),
     )
     corp = d.select("doc_id", t.alias("text"))
-    # pre-sort barrier: see _q_docs_repetition
-    return redact_pii(corp).select(
+    scrubbed = redact_pii(corp).select(
         "doc_id", "n_emails", "n_ssns", "n_phones", "n_ipv4s", "n_ibans",
         "redacted",
-    ).repartition("doc_id").orderBy("doc_id")
+    )
+    return sort_barrier(scrubbed, "doc_id")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

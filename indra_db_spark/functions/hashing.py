@@ -105,6 +105,13 @@ def agent_bounds_key_expr(bounds: Column) -> Column:
     )
 
 
+def agent_key(agent: Column) -> Column:
+    """Entity key ``db_ns:db_id`` of an agent struct: the condition-free
+    head of ``agent_key_expr`` and the grain of agent pairs (refinement
+    join keys, interactions, SIF rows, ``agent_count``)."""
+    return F.concat_ws(":", agent["db_ns"], agent["db_id"])
+
+
 def agent_key_expr(agent: Column) -> Column:
     """Canonical agent key: ``db_ns:db_id[;mut=…][;act=…]`` — the agent
     struct carries a ``TEXT`` fallback namespace for ungrounded mentions,
@@ -120,7 +127,7 @@ def agent_key_expr(agent: Column) -> Column:
     return F.when(
         agent.isNotNull(),
         F.concat(
-            F.concat_ws(":", agent["db_ns"], agent["db_id"]),
+            agent_key(agent),
             muts_part,
             act_part,
             bounds_part,

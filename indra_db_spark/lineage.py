@@ -27,22 +27,12 @@ import os
 import time
 
 from indra_db_spark.sources.storage import _write_json_atomic
-from dataclasses import dataclass, field
 
 
 def fingerprint(*parts: object) -> str:
     return hashlib.md5(
         "|".join(str(p) for p in parts).encode("utf-8")
     ).hexdigest()
-
-
-@dataclass
-class StageRecord:
-    stage: str
-    input_fingerprint: str
-    wall_secs: float
-    rows_out: int
-    extra: dict = field(default_factory=dict)
 
 
 class LineageLog:

@@ -31,20 +31,19 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
-def _large_star(e: DataFrame, dedup: bool = False) -> DataFrame:
+def _large_star(e: DataFrame) -> DataFrame:
     sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     mins = sym.groupBy("u").agg(F.min("v").alias("_mn"))
     mins = mins.select("u", F.least("_mn", "u").alias("_m"))
-    out = (
+    # no distinct here: duplicate removal is deferred to small-star's own
+    # distinct — one fewer full exchange of the edge set per round;
+    # small-star's groupBy-min is duplicate-insensitive, its join output
+    # just carries the dup rows until that distinct.
+    return (
         sym.join(mins, "u")
         .where(F.col("v") > F.col("u"))
         .select(F.col("v").alias("u"), F.col("_m").alias("v"))
     )
-    # dedup=False (default) defers duplicate removal to small-star's own
-    # distinct — one fewer full exchange of the edge set per round;
-    # small-star's groupBy-min is duplicate-insensitive, its join output
-    # just carries the dup rows until that distinct.
-    return out.distinct() if dedup else out
 
 
 def _small_star(e: DataFrame) -> DataFrame:
@@ -55,16 +54,6 @@ def _small_star(e: DataFrame) -> DataFrame:
         nbrs.select(F.col("u"), F.col("_m").alias("v"))
     )
     return emitted.where(F.col("u") != F.col("v")).distinct()
-
-
-def _signature(e: DataFrame) -> tuple[int, int]:
-    row = e.agg(
-        F.count(F.lit(1)).alias("c"),
-        F.coalesce(
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")), F.lit(0)
-        ).alias("h"),
-    ).collect()[0]
-    return int(row["c"]), int(row["h"])
 
 
 def _is_star_forest(e: DataFrame) -> bool:
@@ -101,7 +90,6 @@ def connected_components(
     checkpoint: str = "local",
     checkpoint_dir: str | None = None,
     stats: dict | None = None,
-    dedup_large_star: bool = False,
 ) -> DataFrame:
     """→ (mk_hash, component_id) for every node appearing in ``edges``;
     component_id = min node id in the component.
@@ -173,7 +161,7 @@ def connected_components(
     prev_sig = init_sig
     prev_count_changed = True  # init counts as a "change" (arms the test)
     for i in range(max_iter):
-        e, sig = round_ckpt(_small_star(_large_star(e, dedup=dedup_large_star)))
+        e, sig = round_ckpt(_small_star(_large_star(e)))
         if stats is not None:
             stats["rounds"] = i + 1
         if sig == prev_sig:

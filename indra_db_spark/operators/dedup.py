@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from indra_db_spark.functions.hashing import agent_key
+
 DEFAULT_SALTS = 64
 
 
@@ -80,7 +82,6 @@ def build_pa_statements(raw: DataFrame, n_salts: int = DEFAULT_SALTS) -> DataFra
         a["activity"].alias("activity"),
         a["bounds"].alias("bounds"),
     )
-    agent_key = lambda a: F.concat_ws(":", a["db_ns"], a["db_id"])
     return (
         pa.select(
             "mk_hash",

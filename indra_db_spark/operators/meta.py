@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from indra_db_spark.functions.hashing import agent_key
+
 KB_PREFIX = "kb_"  # curated-knowledgebase sources (db_info analog)
 
 
@@ -65,10 +67,11 @@ def export_sif(pa_statements: DataFrame, path: str) -> None:
     """SIF dump analog (indra_db/util/dump_sif.py): one
     ``subj<TAB>type<TAB>obj`` interaction row per (pair, type), strongest
     evidence first. Plain CSV so downstream network tools ingest directly."""
-    key = lambda a: F.concat_ws(":", F.col(f"{a}.db_ns"), F.col(f"{a}.db_id"))
     (
         pa_statements.groupBy(
-            key("subj").alias("subj_key"), F.col("type"), key("obj").alias("obj_key")
+            agent_key(F.col("subj")).alias("subj_key"),
+            F.col("type"),
+            agent_key(F.col("obj")).alias("obj_key"),
         )
         .agg(F.sum("ev_count").alias("total_ev"))
         .orderBy(F.desc("total_ev"), "subj_key", "obj_key")
@@ -104,10 +107,11 @@ def build_topic_ref_counts(page_topics: DataFrame, evidence: DataFrame) -> DataF
 
 def build_agent_interactions(pa_statements: DataFrame) -> DataFrame:
     """AgentInteractions analog: per (subj, obj, type) rollup."""
-    key = lambda a: F.concat_ws(":", F.col(f"{a}.db_ns"), F.col(f"{a}.db_id"))
     return (
         pa_statements.groupBy(
-            key("subj").alias("subj_key"), key("obj").alias("obj_key"), "type"
+            agent_key(F.col("subj")).alias("subj_key"),
+            agent_key(F.col("obj")).alias("obj_key"),
+            "type",
         )
         .agg(
             F.count(F.lit(1)).alias("n_statements"),

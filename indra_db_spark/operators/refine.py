@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from indra_db_spark.functions.hashing import (
     agent_activity_key_expr,
     agent_bounds_key_expr,
+    agent_key,
     agent_muts_key_expr,
 )
 
@@ -62,8 +63,8 @@ def _cond_refines(general: Column, specific: Column) -> Column:
 
 def _pair_keys(df: DataFrame) -> DataFrame:
     """(k1, k2) join keys; Complex is symmetric → sorted pair."""
-    sk = F.concat_ws(":", F.col("subj.db_ns"), F.col("subj.db_id"))
-    ok = F.concat_ws(":", F.col("obj.db_ns"), F.col("obj.db_id"))
+    sk = agent_key(F.col("subj"))
+    ok = agent_key(F.col("obj"))
     pair = F.when(F.col("type") == "Complex", F.array_sort(F.array(sk, ok))).otherwise(
         F.array(sk, ok)
     )

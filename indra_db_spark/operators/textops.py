@@ -17,7 +17,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from indra_db_spark.functions.hashing import fold_md5_64
-from indra_db_spark.functions.parallel import fan_out
+from indra_db_spark.functions.parallel import fan_out, pin_above_exchange
 from indra_db_spark.functions.textnorm import collapse_ws_expr
 
 # Tiny deterministic stopword lexicons per language (language-ID heuristic).
@@ -431,16 +431,10 @@ def curate_corpus(
     from indra_db_spark.operators.dedup_docs import dedup_clusters
 
     scored = language_id(quality_features(df, text_col), text_col)
-    # The always-false nondeterministic disjunct pins the gate filter
-    # ABOVE the fan_out exchange: the gate predicates reference derived
-    # columns, and Catalyst otherwise substitutes the full 8-regexp
-    # expression tree into a Filter pushed below the repartition — the
-    # whole corpus scored twice, once of that on a single scan task
-    # (plan-verified; guide §4.4 barrier applied to built-ins).
-    never = F.monotonically_increasing_id() < F.lit(0)
     kept = scored.where(
-        ((F.col("quality_score") >= min_quality) & (F.col("lang_pred") == lang))
-        | never
+        pin_above_exchange(
+            (F.col("quality_score") >= min_quality) & (F.col("lang_pred") == lang)
+        )
     ).select(*df.columns, "quality_score", "lang_pred")
     # Materialize the gated corpus behind one exchange: three consumers
     # read `kept` (the dedup shingle pass, its size pass, and the final

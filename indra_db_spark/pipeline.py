@@ -48,8 +48,15 @@ class PipelineResult:
     skipped: list[str] = field(default_factory=list)
 
 
-def _day(col):
+def day(col):
+    """The day-partition value of a timestamp column (raw_statements,
+    evidence)."""
     return F.date_format(col, "yyyy-MM-dd")
+
+
+def bucket(col):
+    """The bucket-partition value of a hash column (pa tables, pa_link)."""
+    return F.pmod(col, F.lit(PA_BUCKETS))
 
 
 def run_pipeline(
@@ -62,9 +69,7 @@ def run_pipeline(
     priors: DataFrame | None = None,
     extractor_version: str = extract_op.EXTRACTOR_VERSION,
     resume: bool = True,
-    n_salts: int = dedup_op.DEFAULT_SALTS,
     signatures: bool = True,
-    include_mentions: bool = False,
     source_expr=None,
 ) -> PipelineResult:
     """Run (or resume) the full pipeline; all outputs land under out_dir.
@@ -162,7 +167,7 @@ def run_pipeline(
             and stage_rec is None  # stage not committed, but parts exist
         )
         if partial_ok:
-            work = pages.where(~_day("warc_ts").isin(sorted(done_days)))
+            work = pages.where(~day("warc_ts").isin(sorted(done_days)))
         else:
             # Fingerprint-invalidated (or first) run: stale per-partition
             # bookkeeping must not survive the full static overwrite below.
@@ -170,7 +175,7 @@ def run_pipeline(
         extracted = extract_op.extract_statements(work, extractor_version)
         raw = ground_op.ground_statements(
             extracted, grounding_map, source_expr=source_expr
-        ).withColumn("day", _day("warc_ts"))
+        ).withColumn("day", day("warc_ts"))
         # Partial resume uses DYNAMIC PARTITION OVERWRITE, not append: a
         # crash can leave a day with data but no part manifest (mid-write)
         # or with BOTH data and a part manifest but no stage commit
@@ -197,19 +202,8 @@ def run_pipeline(
 
     raw = res.tables["raw_statements"]
 
-    # ---- optional: mentions table (schema registry §8.1; off by default —
-    # a second extraction pass over pages, only for NER-style consumers)
-    if include_mentions:
-        fp_m = fingerprint("mentions", pages_fingerprint, "v1")
-        run_stage(
-            "mentions",
-            fp_m,
-            lambda: {"m": extract_op.extract_mentions(pages)},
-            [("mentions", "m", None)],
-        )
-
     # ---- stage 2: distill + dedup → pa_statements_base + evidence
-    fp_pa = fingerprint("pa", fp_raw, n_salts, "v1")
+    fp_pa = fingerprint("pa", fp_raw, dedup_op.DEFAULT_SALTS, "v1")
 
     def build_pa():
         # The extraction stage already performed page-local exact-dup
@@ -218,9 +212,7 @@ def run_pipeline(
         # skipping it removes a full shuffle of the widest table. pa and
         # evidence each read the raw parquet independently with column
         # pruning (cheaper than materializing a shared checkpoint).
-        pa = dedup_op.build_pa_statements(raw, n_salts).withColumn(
-            "bucket", F.pmod("mk_hash", F.lit(PA_BUCKETS))
-        )
+        pa = dedup_op.build_pa_statements(raw).withColumn("bucket", bucket("mk_hash"))
         ev = dedup_op.build_evidence(raw)
         return {"pa": pa, "ev": ev}
 
@@ -252,7 +244,7 @@ def run_pipeline(
         fp_link,
         lambda: {
             "link": refine_op.build_pa_link(pa_base, isa_closure).withColumn(
-                "bucket", F.pmod("supported_mk_hash", F.lit(PA_BUCKETS))
+                "bucket", bucket("supported_mk_hash")
             )
         },
         [("pa_link", "link", ["bucket"])],
@@ -271,7 +263,7 @@ def run_pipeline(
         fp_cc,
         lambda: {
             "cc": cc_op.assign_components(pa_base, pa_link).withColumn(
-                "bucket", F.pmod("mk_hash", F.lit(PA_BUCKETS))
+                "bucket", bucket("mk_hash")
             )
         },
         [("pa_groups", "cc", ["bucket"])],
@@ -282,7 +274,7 @@ def run_pipeline(
 
     def build_final():
         final = belief_op.with_belief(pa_base, pa_link, priors).withColumn(
-            "bucket", F.pmod("mk_hash", F.lit(PA_BUCKETS))
+            "bucket", bucket("mk_hash")
         )
         return {"final": final}
 

@@ -42,6 +42,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from indra_db_spark.functions.hashing import agent_key
 from indra_db_spark.operators.meta import KB_PREFIX
 
 # Statement-type hierarchy (indra.statements class tree, the subset this
@@ -269,11 +270,10 @@ class Query:
     # get_relations / get_agents — same hash set, different final grouping)
     def get_interactions(self, ctx: QueryContext) -> DataFrame:
         """Per-statement rows with agent keys + source map (hash grain)."""
-        key = lambda a: F.concat_ws(":", F.col(f"{a}.db_ns"), F.col(f"{a}.db_id"))
         return self.matching(ctx).select(
             "mk_hash",
-            key("subj").alias("subj_key"),
-            key("obj").alias("obj_key"),
+            agent_key(F.col("subj")).alias("subj_key"),
+            agent_key(F.col("obj")).alias("obj_key"),
             "type",
             "ev_count",
             "belief",

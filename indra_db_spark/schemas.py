@@ -196,16 +196,6 @@ GROUNDING_MAP = T.StructType(
     ]
 )
 
-ONTOLOGY_EDGES = T.StructType(
-    [
-        T.StructField("child_ns", T.StringType(), False),
-        T.StructField("child_id", T.StringType(), False),
-        T.StructField("parent_ns", T.StringType(), False),
-        T.StructField("parent_id", T.StringType(), False),
-        T.StructField("rel", T.StringType(), False),
-    ]
-)
-
 SOURCE_PRIORS = T.StructType(
     [
         T.StructField("source", T.StringType(), False),

@@ -17,10 +17,6 @@ def grounding_map_df(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(LX.grounding_rows(), schemas.GROUNDING_MAP)
 
 
-def ontology_edges_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(LX.ontology_rows(), schemas.ONTOLOGY_EDGES)
-
-
 def source_priors_df(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(LX.prior_rows(), schemas.SOURCE_PRIORS)
 

@@ -47,7 +47,7 @@ from indra_db_spark.operators.components import (
 )
 from indra_db_spark.sources import dims as dims_mod
 from indra_db_spark.sources import storage
-from indra_db_spark.pipeline import PA_BUCKETS
+from indra_db_spark.pipeline import bucket, day
 
 
 # shared with the incremental-dedup store (operators/dedup_store.py)
@@ -147,9 +147,7 @@ def supplement_corpus(
     # batch's days instead of the corpus.
     batch_days = [
         r["d"]
-        for r in new_pages.select(
-            F.date_format("warc_ts", "yyyy-MM-dd").alias("d")
-        ).distinct().collect()
+        for r in new_pages.select(day("warc_ts").alias("d")).distinct().collect()
     ]
     old_raw_batch_days = storage.read_table(
         spark, path("raw_statements")
@@ -333,7 +331,7 @@ def supplement_corpus(
             "mk_hash", "matches_key", "type", "subj", "obj", "mods",
             "ev_count", "src_counts", "belief", "agent_count",
         )
-        .withColumn("bucket", F.pmod("mk_hash", F.lit(PA_BUCKETS)))
+        .withColumn("bucket", bucket("mk_hash"))
         # materialize BEFORE the overwrite below — the plan reads the very
         # pa_statements files the write deletes (read-overwrite-same-path)
         .localCheckpoint()
@@ -394,9 +392,7 @@ def supplement_corpus(
     # rejected up front by _require_current_layout.)
     dirty_buckets = [
         r["b"]
-        for r in dirty.select(
-            F.pmod("mk_hash", F.lit(PA_BUCKETS)).alias("b")
-        ).distinct().collect()
+        for r in dirty.select(bucket("mk_hash").alias("b")).distinct().collect()
     ]
     _scoped_overwrite(
         merged_final.where(F.col("bucket").isin(dirty_buckets)),
@@ -431,7 +427,7 @@ def supplement_corpus(
     groups_need_full_cc = os.path.exists(inflight_marker)
     link_cols = ["supported_mk_hash", "supporting_mk_hash"]
     merged_link_b = merged_link.select(*link_cols).withColumn(
-        "bucket", F.pmod("supported_mk_hash", F.lit(PA_BUCKETS))
+        "bucket", bucket("supported_mk_hash")
     ).localCheckpoint()
     # removed/added are consumed again AFTER pa_link is overwritten below
     # (the pa_groups touched-set union) — materialize them now, while the
@@ -446,7 +442,7 @@ def supplement_corpus(
     link_buckets = [
         r["b"]
         for r in removed.unionByName(added)
-        .select(F.pmod("supported_mk_hash", F.lit(PA_BUCKETS)).alias("b"))
+        .select(bucket("supported_mk_hash").alias("b"))
         .distinct()
         .collect()
     ]
@@ -497,7 +493,7 @@ def supplement_corpus(
         # deterministic in-memory merge (self-healing, full overwrite)
         groups_full = (
             assign_components(merged_final, merged_link_b.select(*link_cols))
-            .withColumn("bucket", F.pmod("mk_hash", F.lit(PA_BUCKETS)))
+            .withColumn("bucket", bucket("mk_hash"))
             .localCheckpoint()  # plan reads the pa_link/pa_groups files
         )
         # scoped overwrite across (disk ∪ frame) buckets, NOT a static
@@ -565,9 +561,7 @@ def supplement_corpus(
     )
     group_buckets = [
         r["b"]
-        for r in region.select(
-            F.pmod("mk_hash", F.lit(PA_BUCKETS)).alias("b")
-        ).distinct().collect()
+        for r in region.select(bucket("mk_hash").alias("b")).distinct().collect()
     ]
     if group_buckets:
         # kept rows are only ever REWRITTEN inside group_buckets, so the
@@ -593,7 +587,7 @@ def supplement_corpus(
             # is partition-pruned to them and region_labels ⊆ region,
             # whose pmod defined group_buckets)
             .select("mk_hash", "component_id")
-            .withColumn("bucket", F.pmod("mk_hash", F.lit(PA_BUCKETS)))
+            .withColumn("bucket", bucket("mk_hash"))
             # plan reads the very pa_groups files the write replaces
             .localCheckpoint()
         )
@@ -618,7 +612,7 @@ def _finish_supplement(spark, path, inflight_marker: str, new_raw: DataFrame):
     # re-derives everything (deterministically); appending raw first would
     # make that same retry a silent no-op with stale derived tables.
     storage.write_table(
-        new_raw.withColumn("day", F.date_format("warc_ts", "yyyy-MM-dd")),
+        new_raw.withColumn("day", day("warc_ts")),
         path("raw_statements"),
         ["day"],
         mode="append",

@@ -131,8 +131,7 @@ def main() -> None:
     from indra_db_spark.sources.synth import source_expr, synth_pages
     from indra_db_spark.streaming import supplement as supplement_mod
 
-    pipeline_mod.PA_BUCKETS = pa_buckets
-    supplement_mod.PA_BUCKETS = pa_buckets
+    pipeline_mod.PA_BUCKETS = pa_buckets  # read by pipeline.bucket at call time
 
     spark = get_spark(app_name="supplement_bench")
     shm = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
