@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from indra_db_spark.functions.hashing import fold_md5_64
+from indra_db_spark.session import local_df
 from indra_db_spark.sources import storage
 
 CORRECT_TAGS = {"correct"}
@@ -63,7 +64,8 @@ def submit_curations(
     bad = {r[2] for r in rows} - (CORRECT_TAGS | INCORRECT_TAGS)
     if bad:
         raise ValueError(f"unknown curation tags: {sorted(bad)}")
-    df = spark.createDataFrame(
+    df = local_df(
+        spark,
         rows,
         "pa_hash long, source_hash long, tag string, text string, "
         "curator string, curated_at string",

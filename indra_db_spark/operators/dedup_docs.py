@@ -319,22 +319,28 @@ def minhash_signatures(
     slower, but exactly mirrorable in other engines (the DuckDB oracle).
 
     Two physically different but value-identical plans, chosen on
-    ``num_hashes`` (measured crossover on a 50k-doc corpus, 3 reps):
+    ``hash_fn`` and ``num_hashes`` (measured crossovers on a 50k-doc
+    corpus, 3 reps):
 
-    * **per-row** (num_hashes ≤ 32): each minimum is array_min over the
-      doc's own distinct-shingle array — no generator, no hash aggregate,
-      no shuffle, so the banded self-join's sides lose two exchanges
-      each (1.74 → 1.39 s at 16 hashes). Identical to min over the
-      exploded rows because ids are unique (word_shingles precondition).
-    * **explode→groupBy** (num_hashes > 32): the per-row form pays one
+    * **per-row** (xxhash64, num_hashes ≤ 32): each minimum is array_min
+      over the doc's own distinct-shingle array — no generator, no hash
+      aggregate, no shuffle, so the banded self-join's sides lose two
+      exchanges each (1.74 → 1.39 s at 16 hashes). Identical to min over
+      the exploded rows because ids are unique (word_shingles
+      precondition).
+    * **explode→groupBy** (everything else): the per-row form pays one
       interpreted array traversal PER family member while the exchange
       savings stay constant, so wide signature families flip (128
       hashes: 1.8 s explode vs 2.0–2.3 s per-row) — the incremental
-      dedup path's 128/16 default stays on the aggregate plan.
+      dedup path's 128/16 default stays on the aggregate plan. The md5
+      family never wins per-row: its lambda re-hashes the shingle string
+      for every member, interpreted (signatures alone, median of 3:
+      16 hashes 44.8 s per-row vs 19.2 s explode; 32 hashes 76.5 s vs
+      31.6 s).
     """
     if hash_fn not in ("xxhash64", "md5"):
         raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    if num_hashes <= 32:
+    if hash_fn == "xxhash64" and num_hashes <= 32:
         # Staging ``_hs`` in its OWN select matters: transform() is
         # expensive, so CollapseProject declines to inline it into the k
         # consumers (SPARK-36718) and each row hashes its shingles once,
@@ -345,21 +351,12 @@ def minhash_signatures(
             .select(F.col(id_col).alias("doc_id"), words.alias("_words"))
             .where(F.size(F.col("_words")) >= k)
         )
-        if hash_fn == "xxhash64":
-            # hash the shingle STRING once, then derive the k family
-            # members from the 8-byte value — k× cheaper than re-hashing
-            hs = F.transform(_shingle_array(text_col, k), lambda s: F.xxhash64(s))
-            h = lambda i: F.array_min(
-                F.transform(F.col("_hs"), lambda v: F.xxhash64(F.lit(i), v))
-            )
-        else:
-            hs = _shingle_array(text_col, k)
-            h = lambda i: F.array_min(
-                F.transform(
-                    F.col("_hs"),
-                    lambda s: fold_md5_64(F.concat_ws("|", F.lit(str(i)), s)),
-                )
-            )
+        # hash the shingle STRING once, then derive the k family
+        # members from the 8-byte value — k× cheaper than re-hashing
+        hs = F.transform(_shingle_array(text_col, k), lambda s: F.xxhash64(s))
+        h = lambda i: F.array_min(
+            F.transform(F.col("_hs"), lambda v: F.xxhash64(F.lit(i), v))
+        )
         return staged.select("doc_id", hs.alias("_hs")).select(
             "doc_id", F.array(*[h(i) for i in range(num_hashes)]).alias("sig")
         )

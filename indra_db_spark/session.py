@@ -3,14 +3,19 @@
 Local-mode knobs mirror what a 1000-executor cluster deployment would set:
 AQE on (runtime re-plan + skew-join splitting), shuffle partitions sized to
 parallelism, Arrow enabled for pandas-UDF exchange, UTC timezone for
-deterministic timestamp semantics.
+deterministic timestamp semantics. ``local_df`` builds small frames from
+driver rows without a Python worker behind them.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Mapping
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 def get_spark(
@@ -67,3 +72,34 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_df(
+    spark: SparkSession, rows: Iterable, schema: T.StructType | str
+) -> DataFrame:
+    """Driver rows → a DataFrame over an Arrow-backed JVM ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>)`` pickles the rows into a PythonRDD, so
+    every later scan of the frame starts a Python-worker job. Handing it a
+    ``pyarrow.Table`` instead puts the rows in the plan itself: scans run in
+    the JVM. Rows are tuples (in ``schema`` field order) or mappings.
+
+    pyarrow does not enforce nullability or Python types, so each row goes
+    through the same verifier ``createDataFrame(<list>)`` applies: a bad row
+    raises here, as it did before.
+    """
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    names = schema.names
+    verify = T._make_type_verifier(schema)
+    tuples = []
+    for r in rows:
+        verify(r)
+        tuples.append(tuple(r.get(n) for n in names) if isinstance(r, Mapping) else r)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*tuples)) or [()] * len(names)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

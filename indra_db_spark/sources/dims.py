@@ -3,6 +3,15 @@
 These are genuinely small (≤ thousands of rows even with real HGNC/FPLX
 resources), so they are built driver-side and **broadcast** into every join
 that uses them — never shuffled against the fact tables.
+
+Each dim is built by ``session.local_df``: the driver rows become one Arrow
+table that the JVM holds as a ``LocalRelation`` inside the plan, so every
+scan of a dim — its content signature for the stage fingerprints, the
+grounding-map checkpoint, the isa-closure groupBy, the priors broadcast —
+is JVM work and starts no Python worker. ``createDataFrame(<list>)`` would
+pickle the rows into a PythonRDD and make each of those scans a
+Python-worker job. The content signatures do not depend on how a dim is
+built, so the stage fingerprints stay stable across the two.
 """
 
 from __future__ import annotations
@@ -10,15 +19,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from indra_db_spark import schemas
+from indra_db_spark.session import local_df
 from indra_db_spark.sources import lexicon as LX
 
 
 def grounding_map_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(LX.grounding_rows(), schemas.GROUNDING_MAP)
+    return local_df(spark, LX.grounding_rows(), schemas.GROUNDING_MAP)
 
 
 def source_priors_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(LX.prior_rows(), schemas.SOURCE_PRIORS)
+    return local_df(spark, LX.prior_rows(), schemas.SOURCE_PRIORS)
 
 
 def isa_closure(edges: list[tuple[str, str]] | None = None) -> list[tuple[str, str]]:
@@ -53,6 +63,4 @@ def isa_closure(edges: list[tuple[str, str]] | None = None) -> list[tuple[str, s
 def isa_closure_df(spark: SparkSession) -> DataFrame:
     """(child_key, parent_key) closure DF — broadcast side of the
     refinement join (SURVEY.md C6)."""
-    return spark.createDataFrame(
-        isa_closure(), "child_key string, parent_key string"
-    )
+    return local_df(spark, isa_closure(), "child_key string, parent_key string")

@@ -21,6 +21,7 @@ from indra_db_spark.functions.hashing import (
     matches_key_expr,
     source_hash_expr,
 )
+from indra_db_spark.session import local_df
 
 KB_TRIPLE = T.StructType(
     [
@@ -45,7 +46,7 @@ def load_knowledgebase(
     df = (
         triples
         if isinstance(triples, DataFrame)
-        else spark.createDataFrame(triples, KB_TRIPLE)
+        else local_df(spark, triples, KB_TRIPLE)
     )
     source = f"kb_{name}"
     no_muts = F.array().cast(

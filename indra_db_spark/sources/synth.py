@@ -20,6 +20,7 @@ from collections.abc import Iterator
 import pandas as pd
 
 from indra_db_spark.functions.extract_html import extract_text_py
+from indra_db_spark.session import local_df
 from indra_db_spark.sources import lexicon as LX
 
 _M = (1 << 64) - 1
@@ -309,8 +310,8 @@ def concept_rows(n: int, seed: int = 42) -> list[tuple[str, str]]:
 
 
 def page_topics(spark, n: int, seed: int = 42):
-    return spark.createDataFrame(topic_rows(n, seed), "url string, topic_id string")
+    return local_df(spark, topic_rows(n, seed), "url string, topic_id string")
 
 
 def page_concepts(spark, n: int, seed: int = 42):
-    return spark.createDataFrame(concept_rows(n, seed), "url string, topic_id string")
+    return local_df(spark, concept_rows(n, seed), "url string, topic_id string")

@@ -135,15 +135,19 @@ def test_minhash_lsh_finds_near_dups(spark, docs):
 
 
 def test_minhash_perrow_equals_explode_path(spark, docs):
-    # minhash_signatures picks a per-row plan for num_hashes <= 32 and the
-    # explode+groupBy plan above; the hash family h_i is prefix-stable, so
-    # the 32-hash (per-row) signature must equal the first 32 entries of
-    # the 40-hash (explode) signature for every doc and both families.
+    # minhash_signatures picks a per-row plan for xxhash64 at num_hashes
+    # <= 32 and the explode+groupBy plan otherwise (md5 always: it never
+    # wins per-row); the hash family h_i is prefix-stable, so the 32-hash
+    # signature must equal the first 32 entries of the 40-hash (explode)
+    # signature for every doc and both families.
+    def generates(df):
+        return "Generate" in df._jdf.queryExecution().analyzed().toString()
+
     for fn in ("xxhash64", "md5"):
-        a = {
-            r["doc_id"]: r["sig"]
-            for r in minhash_signatures(docs, num_hashes=32, hash_fn=fn).collect()
-        }
+        sig32 = minhash_signatures(docs, num_hashes=32, hash_fn=fn)
+        assert generates(sig32) == (fn == "md5")
+        assert generates(minhash_signatures(docs, num_hashes=40, hash_fn=fn))
+        a = {r["doc_id"]: r["sig"] for r in sig32.collect()}
         b = {
             r["doc_id"]: r["sig"][:32]
             for r in minhash_signatures(docs, num_hashes=40, hash_fn=fn).collect()
