@@ -167,6 +167,9 @@ def load_context(
     which EVERY serving query's mk_hash machinery (evidence hydration
     join, ev_limit window, the evidences groupBy) reads pre-clustered
     buckets with no Exchange (asserted in tests/test_bucketing.py).
+    Each table is published as one file per non-empty bucket, so a
+    lookup on a page of hashes opens only those hashes' buckets; the
+    bucket count is also the publish step's write parallelism.
     Catalog names carry a short hash of the resolved ``out_dir``
     (``pa_statements_srv_<h8>``) so two bucketed contexts for different
     corpora can coexist in one session without silently repointing each

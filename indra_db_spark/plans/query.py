@@ -29,6 +29,13 @@ for predicate queries, a semi-join otherwise — and every result mode
 (evaluate, get_statements, get_interactions and the groupings on top)
 starts from it.
 
+Serving is two-phase, as in the reference client: ``Query.page(ctx)``
+orders and paginates the matching rows, and a limited
+``get_statements`` collects that page's mk_hashes first, then hydrates
+it by hash lookups (``mk_hash IN page``) on pa_statements and evidence —
+O(page) work on mk_hash-bucketed tables, whose scans prune to the
+page's buckets.
+
 Every leaf is also **invertible** (reference: Query._inverted), and
 get_statements supports sort_by/limit/offset (W4) + ev_limit (W2).
 """
@@ -149,22 +156,16 @@ class Query:
             "mk_hash", "ev_count", "belief", "agent_count"
         )
 
-    def get_statements(
+    def page(
         self,
         ctx: QueryContext,
-        ev_limit: int | None = None,
         sort_by: str = "ev_count",
         limit: int | None = None,
         offset: int | None = None,
         after: tuple | None = None,
     ) -> DataFrame:
-        """Hydrated statements (+ evidences array, ev_limit-truncated).
-
-        Scale shape: evidence is **semi-joined down to the selected hash
-        set before** the ev_limit window + collect_list — hydrating 25
-        statements must never shuffle the full evidence table
-        (reference: [P] client/readonly/query.py::Query.get_statements
-        fetches evidence per returned hash).
+        """The selected statement rows: matching, ordered by
+        (``sort_by`` desc, mk_hash asc) and paginated.
 
         Pagination: ``after=(last_sort_value, last_mk_hash)`` is keyset
         pagination — a pure pushed-down filter, the scalable path. Page N
@@ -190,17 +191,41 @@ class Query:
                 .drop("_rn")
             )
         stmts = stmts.orderBy(F.desc(sort_by), F.asc("mk_hash"))
-        if limit is not None:
-            stmts = stmts.limit(limit)
+        return stmts if limit is None else stmts.limit(limit)
 
-        # Hydrate evidence ONLY for the selected statements. With a limit
-        # the selection is ≤ limit rows → broadcast the hash set; otherwise
-        # semi-join on the query's hash set (still never the full corpus).
+    def get_statements(
+        self,
+        ctx: QueryContext,
+        ev_limit: int | None = None,
+        sort_by: str = "ev_count",
+        limit: int | None = None,
+        offset: int | None = None,
+        after: tuple | None = None,
+    ) -> DataFrame:
+        """Hydrated statements (+ evidences array, ev_limit-truncated) of
+        ``page(ctx, sort_by, limit, offset, after)``.
+
+        Scale shape: evidence is narrowed to the page's hashes **before**
+        the ev_limit window + collect_list — hydrating 25 statements must
+        never shuffle the full evidence table (reference: [P]
+        client/readonly/query.py::Query.get_statements chooses the page of
+        hashes, then fetches evidence for exactly those hashes).
+
+        With a ``limit`` (the server always sets one) the page is selected
+        **at call time**: one job collects its ≤ ``limit`` mk_hashes, and
+        the result is built from ``pa_statements`` and ``evidence`` each
+        filtered on that literal hash set — a filter pushed into both
+        scans, which on mk_hash-bucketed tables also prunes to the page's
+        buckets. Without a limit the result stays lazy: evidence is
+        semi-joined on the selection's hash set.
+        """
+        stmts = self.page(ctx, sort_by, limit, offset, after)
         if limit is not None:
-            sel = F.broadcast(stmts.select("mk_hash"))
+            page = [r["mk_hash"] for r in stmts.select("mk_hash").collect()]
+            stmts = ctx.pa_statements.where(F.col("mk_hash").isin(page))
+            ev = ctx.evidence.where(F.col("mk_hash").isin(page))
         else:
-            sel = stmts.select("mk_hash")
-        ev = ctx.evidence.join(sel, "mk_hash", "left_semi")
+            ev = ctx.evidence.join(stmts.select("mk_hash"), "mk_hash", "left_semi")
         if ev_limit is not None:
             # best-evidence-first truncation ([P] query.py::Query
             # .get_statements returns richest evidence first): longer

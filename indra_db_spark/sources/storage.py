@@ -218,8 +218,20 @@ def write_bucketed_table(
     (refine pa×pa, belief pa×link, evidence hydration ev×pa) read
     pre-clustered buckets instead of shuffling the corpus
     (asserted exchange-free in tests/test_bucketing.py).
+
+    One file per bucket: Spark's bucket id is ``pmod(murmur3(col), N)``,
+    the same expression ``repartition(N, col)`` partitions on, so each
+    write task holds exactly one bucket and a lookup on ``bucket_col``
+    opens one file per selected bucket (without the repartition every
+    task writes a file for every bucket it sees: tasks × N files). The
+    bucket count is therefore also the write's parallelism.
     """
-    w = df.write.format("parquet").mode("overwrite").bucketBy(buckets, bucket_col)
+    w = (
+        df.repartition(buckets, bucket_col)
+        .write.format("parquet")
+        .mode("overwrite")
+        .bucketBy(buckets, bucket_col)
+    )
     if sort_col:
         w = w.sortBy(sort_col)
     if path:

@@ -7,6 +7,8 @@ for Iceberg ``bucket(N, mk_hash)``), the same joins read pre-clustered
 buckets: the physical plan carries NO Exchange on the bucketed sides.
 """
 
+import os
+import re
 import shutil
 import tempfile
 
@@ -16,6 +18,7 @@ from pyspark.sql import functions as F
 from indra_db_spark.operators.dedup import build_evidence, build_pa_statements
 from indra_db_spark.operators.extract import extract_statements
 from indra_db_spark.operators.grounding import ground_statements
+from indra_db_spark.plans.query import HasHash, QueryContext
 from indra_db_spark.sources import dims
 from indra_db_spark.sources.storage import write_bucketed_table
 from indra_db_spark.sources.synth import source_expr as synth_source_expr, synth_pages
@@ -139,3 +142,37 @@ def test_bucketed_values_roundtrip(spark, warehouse):
     assert sorted(r["mk_hash"] for r in pa.select("mk_hash").collect()) == sorted(
         r["mk_hash"] for r in plain.select("mk_hash").collect()
     )
+
+
+def _bucket_ids(df):
+    """Bucket ids of df's mk_hashes: Spark's pmod(murmur3(col), N)."""
+    return {
+        r[0]
+        for r in df.select(F.pmod(F.hash("mk_hash"), F.lit(16))).distinct().collect()
+    }
+
+
+def test_write_bucketed_table_one_file_per_bucket(spark, warehouse):
+    """Each non-empty bucket is one file: the bucket ids in the file
+    names are distinct, and they are exactly the rows' bucket ids."""
+    for sub, table in (("pa", "pa_bucketed"), ("ev", "ev_bucketed")):
+        files = [f for f in os.listdir(f"{warehouse}/{sub}") if f.endswith(".parquet")]
+        ids = [int(re.search(r"_(\d+)(?:\..*)?$", f).group(1)) for f in files]
+        assert len(ids) == len(set(ids)) <= 16, files
+        assert set(ids) == _bucket_ids(spark.table(table))
+
+
+def test_served_page_reads_only_its_buckets(spark, warehouse):
+    """Hydrating a page scans only the evidence buckets its hashes fall in."""
+    ctx = QueryContext(spark.table("pa_bucketed"), spark.table("ev_bucketed"))
+    hashes = [
+        r["mk_hash"] for r in ctx.pa_statements.select("mk_hash").limit(2).collect()
+    ]
+    want = _bucket_ids(ctx.pa_statements.where(F.col("mk_hash").isin(hashes)))
+    df = HasHash(hashes).get_statements(ctx, ev_limit=2, limit=20)
+    assert sorted(r["mk_hash"] for r in df.collect()) == sorted(hashes)
+    plan = df._jdf.queryExecution().sparkPlan().toString()
+    ev_scan = next(
+        line for line in plan.splitlines() if "default.ev_bucketed[" in line
+    )
+    assert f"SelectedBucketsCount: {len(want)} out of 16" in ev_scan, ev_scan

@@ -4,6 +4,7 @@ compose with & | ~."""
 
 import functools
 import operator
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -324,24 +325,49 @@ def _is_join(node, join_type):
     return node.nodeName() == "Join" and node.joinType().toString() == join_type
 
 
-def test_get_statements_hydration_is_selection_scoped(ctx):
-    """The evidence aggregate must run AFTER a semi-join on the selected
-    hashes — hydrating a limited page must not aggregate the full evidence
+@pytest.fixture(scope="module")
+def pq(spark, ctx, tmp_path_factory):
+    """``ctx`` written to parquet, so plans show the scans' pushed filters."""
+    root = tmp_path_factory.mktemp("served")
+    ctx.pa_statements.write.parquet(str(root / "pa"))
+    ctx.evidence.write.parquet(str(root / "ev"))
+    return QueryContext(
+        pa_statements=spark.read.parquet(str(root / "pa")),
+        evidence=spark.read.parquet(str(root / "ev")),
+    )
+
+
+def _pushed_filters(df, table):
+    """PushedFilters of each parquet scan of ``<root>/<table>`` in df's plan."""
+    plan = df._jdf.queryExecution().sparkPlan()
+    scans = [
+        n.metadata().apply("PushedFilters")
+        for n in _plan_nodes(plan)
+        if n.nodeName() == "Scan parquet "
+        and n.metadata().apply("Location").endswith(f"/{table}]")
+    ]
+    assert scans, plan.toString()
+    return scans
+
+
+def test_get_statements_hydration_is_selection_scoped(ctx, pq):
+    """A limited page is hydrated from its own hashes: get_statements
+    collects the page's mk_hashes, then both the pa_statements and the
+    evidence scans filter on that literal set — no semi-join on a second
+    copy of the selection, and never an aggregate over the full evidence
     table (scale guard: 10^9 evidence rows / 25 statements)."""
     q = HasType(["Activation"])
-    df = q.get_statements(ctx, ev_limit=2, limit=5)
+    df = q.get_statements(pq, ev_limit=2, limit=5)
     plan = df._jdf.queryExecution().optimizedPlan()
-    # the evidence branch's collect_list aggregate sits above a LeftSemi
-    # whose right side is the selected (limited) page of hashes
-    agg = next(
-        n
-        for n in _plan_nodes(plan)
-        if n.nodeName() == "Aggregate"
-        and "collect_list" in n.aggregateExpressions().toString()
+    assert not any(_is_join(n, "LeftSemi") for n in _plan_nodes(plan)), (
+        plan.toString()
     )
-    semis = [n for n in _plan_nodes(agg) if _is_join(n, "LeftSemi")]
-    assert semis, plan.toString()
-    assert any("Limit" in n.right().toString() for n in semis), plan.toString()
+    page = [r["mk_hash"] for r in df.select("mk_hash").collect()]
+    assert page
+    for table in ("pa", "ev"):
+        for pushed in _pushed_filters(df, table):
+            assert re.search(r"\b(In|InSet|EqualTo)\(mk_hash,", pushed), pushed
+            assert all(str(h) in pushed for h in page), pushed
     # results identical to the unscoped reference formulation
     ref_ev = ctx.evidence.join(df.select("mk_hash"), "mk_hash", "left_semi")
     got = {
@@ -571,19 +597,12 @@ def test_predicate_compilation_matches_join_formulation(null_ctx):
     assert NULL_ROW_HASH not in _hashes(HasReadings(), ctx)
 
 
-def test_served_statement_side_is_one_filter(spark, ctx, tmp_path_factory):
+def test_served_statement_side_is_one_filter(pq):
     """A conjunctive request over pa_statements leaves plans as one
     filtered scan: no name_meta Generate, no join on the statement side,
     and the positive leaves pushed into the parquet scan."""
     from indra_db_spark.api import parse_query
 
-    root = tmp_path_factory.mktemp("served")
-    ctx.pa_statements.write.parquet(str(root / "pa"))
-    ctx.evidence.write.parquet(str(root / "ev"))
-    pq = QueryContext(
-        pa_statements=spark.read.parquet(str(root / "pa")),
-        evidence=spark.read.parquet(str(root / "ev")),
-    )
     q = parse_query(
         {
             "subject": "TP53",
@@ -594,23 +613,15 @@ def test_served_statement_side_is_one_filter(spark, ctx, tmp_path_factory):
         }
     )
     df = q.get_statements(pq, limit=20)
-    qe = df._jdf.queryExecution()
-    opt = qe.optimizedPlan()
-    assert "Generate" not in opt.toString(), opt.toString()
-    hydration = next(n for n in _plan_nodes(opt) if _is_join(n, "LeftOuter"))
-    stmt_side = hydration.left()
-    assert not any(n.nodeName() == "Join" for n in _plan_nodes(stmt_side)), (
-        stmt_side.toString()
-    )
-    # the statement page is scanned twice: once for the rows, once as the
-    # hash set the evidence hydration semi-joins on
-    scans = [
-        n.metadata().apply("PushedFilters")
-        for n in _plan_nodes(qe.sparkPlan())
-        if n.nodeName() == "Scan parquet "
-        and n.metadata().apply("Location").endswith("/pa]")
-    ]
-    assert scans, qe.sparkPlan().toString()
+    # the page get_statements collects its hashes from: one filtered scan
+    # of pa_statements, with the positive leaves pushed into it
+    sel = q.page(pq, limit=20)
+    opt = sel._jdf.queryExecution().optimizedPlan()
+    assert not any(
+        n.nodeName() in ("Join", "Generate") for n in _plan_nodes(opt)
+    ), opt.toString()
+    scans = _pushed_filters(sel, "pa")
+    assert len(scans) == 1, scans
     for pushed in scans:
         for leaf in (
             "EqualTo(subj.name,TP53)",

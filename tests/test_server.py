@@ -3,21 +3,24 @@ Flask layer, re-expressed framework-free): real sockets end-to-end, plus
 the pure route handler for error paths."""
 
 import json
+import shutil
+import tempfile
 import urllib.error
 import urllib.request
+from urllib.parse import urlencode
 
 import pytest
 from pyspark.sql import functions as F
 
 from indra_db_spark import schemas
-from indra_db_spark.api import run_query
+from indra_db_spark.api import load_context, parse_query, run_query
 from indra_db_spark.operators.dedup import build_evidence, build_pa_statements
 from indra_db_spark.operators.distill import distill
 from indra_db_spark.operators.extract import extract_statements
 from indra_db_spark.operators.grounding import ground_statements
 from indra_db_spark.plans.query import QueryContext
 from indra_db_spark.server import handle_request, serve_background
-from indra_db_spark.sources import dims
+from indra_db_spark.sources import dims, storage
 from indra_db_spark.sources.synth import (
     source_expr as synth_source_expr,
     synth_pages,
@@ -133,3 +136,76 @@ def test_non_statement_routes_reject_result_params(ctx):
     # limit itself still works
     code, body = handle_request("/interactions?agent=TP53&limit=1", ctx)
     assert code == 200
+
+
+@pytest.fixture(scope="module")
+def contexts(spark, ctx):
+    """The plain and the mk_hash-bucketed serving context of one corpus."""
+    base = tempfile.mkdtemp(prefix="kg_srv_guard_")
+    for name, df in (("pa_statements", ctx.pa_statements), ("evidence", ctx.evidence)):
+        storage.write_table(df, f"{base}/{name}", compute_signature=False)
+    yield {
+        "plain": load_context(spark, base),
+        "bucketed": load_context(spark, base, bucketed=True),
+    }
+    for t in spark.catalog.listTables():
+        if "_srv_" in t.name:
+            spark.sql(f"DROP TABLE IF EXISTS {t.name}")
+    shutil.rmtree(base, ignore_errors=True)
+
+
+def _guard_params(ctx):
+    """One request per param family of the serving benchmark's mix."""
+    hashes = [
+        r["mk_hash"]
+        for r in ctx.pa_statements.select("mk_hash").orderBy("mk_hash").limit(4).collect()
+    ]
+    urls = [
+        r["url"]
+        for r in ctx.evidence.select("url").distinct().orderBy("url").limit(2).collect()
+    ]
+    first = run_query({"agent": "TP53", "limit": 5}, ctx).collect()
+    return [
+        {"subject": "TP53", "limit": 20},
+        {"agent": "11998@HGNC", "limit": 20},
+        {"subject": "TP53", "object": "MDM2!", "limit": 20},
+        {"type": "RegulateActivity", "type_subclasses": "true", "limit": 20},
+        {"hashes": hashes},
+        {"paper_ids": urls, "limit": 20},
+        {"agent": "TP53", "min_evidence": 2, "sort_by": "belief", "limit": 5},
+        {"agent": "TP53", "limit": 5,
+         "after": f"{first[-1]['ev_count']},{first[-1]['mk_hash']}"},
+        {"agent": "TP53", "limit": 5, "offset": 3, "ev_limit": 1},
+    ]
+
+
+def _canonical(body):
+    return sorted(json.dumps(r, sort_keys=True) for r in json.loads(body))
+
+
+def test_bucketed_context_serves_what_plain_serves(contexts, ctx):
+    """Both physical paths — filters over plain parquet and bucket-pruned
+    lookups over the bucketed tables — give the same /statements and
+    /statements/json bodies for every param family."""
+    for params in _guard_params(ctx):
+        qs = urlencode(params, doseq=True)
+        for route in ("/statements", "/statements/json"):
+            got = {
+                name: handle_request(f"{route}?{qs}", c)
+                for name, c in contexts.items()
+            }
+            assert got["plain"][0] == got["bucketed"][0] == 200, (route, qs, got)
+            plain = _canonical(got["plain"][1])
+            assert plain, (route, qs)
+            assert _canonical(got["bucketed"][1]) == plain, (route, qs)
+
+
+def test_empty_page(contexts):
+    """A limited query that matches nothing: zero rows with a page's
+    schema on either context, and 200 [] over the route."""
+    for c in contexts.values():
+        page = parse_query({"agent": "TP53"}).get_statements(c, limit=20)
+        empty = parse_query({"agent": "NOSUCHGENE"}).get_statements(c, limit=20)
+        assert empty.collect() == [] and empty.schema == page.schema
+        for route in ("/statements", "/statements/json"):
+            assert handle_request(f"{route}?agent=NOSUCHGENE", c) == (200, b"[]")
