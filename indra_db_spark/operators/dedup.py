@@ -18,20 +18,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from indra_db_spark.functions.hashing import agent_key
+from indra_db_spark.sources import storage
 
 DEFAULT_SALTS = 64
-
-
-def salted_counts(
-    df: DataFrame, keys: list[str], salt_col: str = "raw_id", n_salts: int = DEFAULT_SALTS
-) -> DataFrame:
-    """count(*) per key via two-phase salted aggregation → column ``n``."""
-    stage1 = (
-        df.withColumn("_salt", F.pmod(F.xxhash64(salt_col), F.lit(n_salts)))
-        .groupBy(*keys, "_salt")
-        .agg(F.count(F.lit(1)).alias("_partial"))
-    )
-    return stage1.groupBy(*keys).agg(F.sum("_partial").alias("n"))
 
 
 def build_pa_statements(raw: DataFrame, n_salts: int = DEFAULT_SALTS) -> DataFrame:
@@ -106,13 +95,9 @@ def build_evidence(raw: DataFrame) -> DataFrame:
     SURVEY §8.1) so the table lands day-partitioned and the incremental
     supplement can rewrite only the partitions holding affected rows.
 
-    ``day`` is NEVER NULL: rows without a crawl timestamp (knowledgebase
-    loads — sources/knowledgebase.py writes warc_ts NULL) land in a
-    literal ``undated`` partition. A null day would break the
-    supplement's partition-scoping joins (null keys never equi-match, so
-    an affected hash's null-day rows would be excluded from the rewrite
-    frame while dynamic overwrite still replaced the
-    __HIVE_DEFAULT_PARTITION__ directory — silent data loss)."""
+    ``day`` is :func:`storage.day`, never NULL: rows without a crawl
+    timestamp (knowledgebase loads — sources/knowledgebase.py writes
+    warc_ts NULL) land in the literal ``undated`` partition."""
     return raw.select(
         "mk_hash",
         "raw_id",
@@ -120,7 +105,5 @@ def build_evidence(raw: DataFrame) -> DataFrame:
         "source",
         "evidence_text",
         "source_hash",
-        F.coalesce(
-            F.date_format("warc_ts", "yyyy-MM-dd"), F.lit("undated")
-        ).alias("day"),
+        storage.day("warc_ts").alias("day"),
     )

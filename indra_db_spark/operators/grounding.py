@@ -175,7 +175,6 @@ def ground_statements(
     extracted: DataFrame,
     grounding_map: DataFrame,
     source_expr: "Column | Callable[[Column], Column] | None" = None,
-    broadcast_map: bool | None = None,
 ) -> DataFrame:
     """Pre-grounding statement rows → ``raw_statements`` (SURVEY.md §8.1).
 
@@ -187,21 +186,19 @@ def ground_statements(
     taking the url Column; default = the url host
     (:func:`default_source_expr`).
 
-    ``broadcast_map``: join strategy for the three grounding joins.
-    ``None`` (default) decides from the resolved map's row count against
-    :data:`GROUNDING_BROADCAST_MAX_ROWS` — a deployment-size grounding
-    map can exceed what a broadcast should carry, in which case the
-    explicit broadcast hint is dropped and Catalyst/AQE plan shuffle
-    joins on the normalized text key instead (results identical —
-    property-tested in tests/test_operators.py).
+    Join strategy for the three grounding joins: decided from the
+    resolved map's row count against :data:`GROUNDING_BROADCAST_MAX_ROWS`
+    — a deployment-size grounding map can exceed what a broadcast should
+    carry, in which case the explicit broadcast hint is dropped and
+    Catalyst/AQE plan shuffle joins on the normalized text key instead
+    (results identical — property-tested in tests/test_operators.py).
     """
     # Materialize the resolved dim once (localCheckpoint): the three
     # grounding joins each reference it, and without materialization each
     # would re-run the resolution window job. The count used by the auto
     # decision reads the checkpointed blocks, not the lineage.
     resolved = resolve_grounding_map(grounding_map).localCheckpoint()
-    if broadcast_map is None:
-        broadcast_map = resolved.count() <= GROUNDING_BROADCAST_MAX_ROWS
+    broadcast_map = resolved.count() <= GROUNDING_BROADCAST_MAX_ROWS
     # Bound-condition entity grounding must precede the subj struct build
     # (the bounds array reads the _bound_* columns).
     df = _ground_bound_text(extracted, resolved, broadcast_map)

@@ -123,7 +123,6 @@ def winnow_fingerprints(
     k: int = 8,
     w: int = 4,
     hash_fn: str = "xxhash64",
-    via: str | None = None,
 ) -> DataFrame:
     """Rolling-hash document fingerprints via winnowing (Schleimer et al.,
     MOSS): hash every char k-gram of the normalized text, keep the MIN of
@@ -148,26 +147,16 @@ def winnow_fingerprints(
     NB: ``F.sequence(1, n)`` DESCENDS when n < 1 (step defaults to -1) —
     short/empty docs must short-circuit to an empty array.
 
-    ``via``: how the gram-hash array is built (property-tested equal):
-      - ``'arrays'`` — per-row transform, NO shuffle. Lambda elements run
-        interpreted, so this wins when the hash is cheap (xxhash64).
-      - ``'explode'`` — posexplode grams to rows, hash in whole-stage
-        codegen, collect back per doc (one shuffle of (doc, pos, long)).
-        Measured at 5000×300-char docs: md5 7.4 s (arrays) vs 6.9 s
-        (explode) — md5 itself dominates, so the codegen win is ~7% and
-        does NOT pay for the shuffle; kept for experimentation and as
-        the template for genuinely heavy per-gram expressions.
-      - default (None): 'arrays' for both families.
+    Gram hashes are built per row with no shuffle. Exploding grams to
+    rows so the hash runs in whole-stage codegen measured slower on both
+    hash families (md5 itself dominates and the codegen win does not pay
+    for the shuffle), so that plan is not offered.
     """
     gram_hash = (
         (lambda g: F.xxhash64(g)) if hash_fn == "xxhash64" else fold_md5_64
     )
     if hash_fn not in ("xxhash64", "md5"):
         raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    if via is None:
-        via = "arrays"
-    if via not in ("arrays", "explode"):
-        raise ValueError(f"unknown via {via!r}")
     # stage 1: normalize once per row. fan_out BEFORE normalizing so the
     # (heavy, per-row O(n·w)) HOF stages below run at full parallelism
     # even when the corpus arrives as one parquet row group; the exchange
@@ -178,48 +167,18 @@ def winnow_fingerprints(
     )
     norm = F.col("_norm")
     n_g = F.length(norm) - k + 1
-    if via == "arrays":
-        # stage 2: gram hashes — lambda references only the _norm attribute
-        s2 = s1.select(
-            "doc_id",
-            F.when(n_g < 1, F.array().cast("array<long>"))
-            .otherwise(
-                F.transform(
-                    F.sequence(F.lit(1), n_g),
-                    lambda i: gram_hash(F.substr(norm, i, F.lit(k))),
-                )
-            )
-            .alias("_h"),
-        )
-    else:
-        # stage 2': one row per gram (explode_outer keeps gram-less docs),
-        # hash in codegen, then re-assemble the ordered array per doc.
-        # collect_list skips nulls, so gram-less docs fold to [].
-        ex = s1.select(
-            "doc_id",
-            F.explode_outer(
-                F.when(n_g >= 1, F.sequence(F.lit(1), n_g))
-            ).alias("_i"),
-            "_norm",
-        )
-        hashed = ex.select(
-            "doc_id",
-            F.when(
-                F.col("_i").isNotNull(),
-                F.struct(
-                    F.col("_i").alias("i"),
-                    gram_hash(F.substr(norm, F.col("_i"), F.lit(k))).alias("h"),
-                ),
-            ).alias("_ih"),
-        )
-        s2 = (
-            hashed.groupBy("doc_id")
-            .agg(F.array_sort(F.collect_list("_ih")).alias("_ihs"))
-            .select(
-                "doc_id",
-                F.transform("_ihs", lambda s: s["h"]).alias("_h"),
+    # stage 2: gram hashes — lambda references only the _norm attribute
+    s2 = s1.select(
+        "doc_id",
+        F.when(n_g < 1, F.array().cast("array<long>"))
+        .otherwise(
+            F.transform(
+                F.sequence(F.lit(1), n_g),
+                lambda i: gram_hash(F.substr(norm, i, F.lit(k))),
             )
         )
+        .alias("_h"),
+    )
     # stage 3: winnow — per-window min over the MATERIALIZED hash array.
     # For small w the window min is a least() chain of element_at lookups:
     # 3.2× faster than array_min(slice(...)) (slice allocates a w-element

@@ -48,12 +48,6 @@ class PipelineResult:
     skipped: list[str] = field(default_factory=list)
 
 
-def day(col):
-    """The day-partition value of a timestamp column (raw_statements,
-    evidence)."""
-    return F.date_format(col, "yyyy-MM-dd")
-
-
 def bucket(col):
     """The bucket-partition value of a hash column (pa tables, pa_link)."""
     return F.pmod(col, F.lit(PA_BUCKETS))
@@ -148,8 +142,9 @@ def run_pipeline(
     gm_sig = storage._content_signature(grounding_map)[1]
     isa_sig = storage._content_signature(isa_closure)[1]
     priors_sig = storage._content_signature(priors)[1]
+    # v2: undated pages land in the ``undated`` day partition, not NULL
     fp_raw = fingerprint(
-        "raw", pages_fingerprint, extractor_version, source_tag, gm_sig, "v1"
+        "raw", pages_fingerprint, extractor_version, source_tag, gm_sig, "v2"
     )
     stage = "raw_statements"
     if resume and log.completed(stage, fp_raw):
@@ -167,7 +162,7 @@ def run_pipeline(
             and stage_rec is None  # stage not committed, but parts exist
         )
         if partial_ok:
-            work = pages.where(~day("warc_ts").isin(sorted(done_days)))
+            work = pages.where(~storage.day("warc_ts").isin(sorted(done_days)))
         else:
             # Fingerprint-invalidated (or first) run: stale per-partition
             # bookkeeping must not survive the full static overwrite below.
@@ -175,7 +170,7 @@ def run_pipeline(
         extracted = extract_op.extract_statements(work, extractor_version)
         raw = ground_op.ground_statements(
             extracted, grounding_map, source_expr=source_expr
-        ).withColumn("day", day("warc_ts"))
+        ).withColumn("day", storage.day("warc_ts"))
         # Partial resume uses DYNAMIC PARTITION OVERWRITE, not append: a
         # crash can leave a day with data but no part manifest (mid-write)
         # or with BOTH data and a part manifest but no stage commit

@@ -25,6 +25,22 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+def day(col):
+    """The day-partition value of a crawl timestamp column
+    (raw_statements, evidence): ``yyyy-MM-dd``, or the literal
+    ``undated`` when the timestamp is NULL (knowledgebase loads, pages
+    without a capture time).
+
+    Never NULL, because a NULL partition value never equi-matches in the
+    supplement's partition-scoping joins and ``isin`` filters: an
+    affected hash's null-day evidence would be left out of the rewrite
+    frame while dynamic overwrite still replaced the
+    ``__HIVE_DEFAULT_PARTITION__`` directory (silent data loss), and a
+    partial resume would drop undated pages. Nor can NULL be sorted next
+    to the dated values, which the supplement does with a batch's days."""
+    return F.coalesce(F.date_format(col, "yyyy-MM-dd"), F.lit("undated"))
+
+
 def _hashable(df: DataFrame) -> list:
     """xxhash64 rejects MAP columns (map iteration order is unspecified) —
     canonicalize them to sorted entry arrays first."""

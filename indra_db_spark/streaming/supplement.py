@@ -47,11 +47,19 @@ from indra_db_spark.operators.components import (
 )
 from indra_db_spark.sources import dims as dims_mod
 from indra_db_spark.sources import storage
-from indra_db_spark.pipeline import bucket, day
+from indra_db_spark.pipeline import bucket
 
 
 # shared with the incremental-dedup store (operators/dedup_store.py)
 _scoped_overwrite = storage.scoped_overwrite
+
+# Per-source cap on the url sets the evidence gather collects so it can
+# run as a pruned, filter-pushed read of the raw log — batch urls and
+# affected-hash urls are each capped, so the pushed
+# ``In(url, …)`` literal holds at most 2× this many values; above either
+# cap the gather falls back to the semi-join full scan (see the step-4
+# comment). 0 forces the fallback.
+GATHER_ISIN_MAX = 20_000
 
 
 def _partitioned_by(table_path: str, part_col: str) -> bool:
@@ -107,17 +115,9 @@ def supplement_corpus(
     priors: DataFrame | None = None,
     extractor_version: str = extract_op.EXTRACTOR_VERSION,
     source_expr=None,
-    gather_isin_max: int = 20_000,
 ) -> dict[str, DataFrame]:
     """Merge new pages into the corpus at ``out_dir`` (built by
-    pipeline.run_pipeline). Returns the updated tables.
-
-    ``gather_isin_max``: per-source cap on the url sets the evidence
-    gather collects to the driver to run as a pruned, filter-pushed read
-    of the raw log — batch urls and affected-hash urls are each capped,
-    so the pushed ``In(url, …)`` literal holds at most 2× this many
-    values; above either cap the gather falls back to the semi-join full
-    scan (see the step-4 comment). 0 forces the fallback."""
+    pipeline.run_pipeline). Returns the updated tables."""
     grounding_map = (
         grounding_map if grounding_map is not None else dims_mod.grounding_map_df(spark)
     )
@@ -147,7 +147,9 @@ def supplement_corpus(
     # batch's days instead of the corpus.
     batch_days = [
         r["d"]
-        for r in new_pages.select(day("warc_ts").alias("d")).distinct().collect()
+        for r in new_pages.select(storage.day("warc_ts").alias("d"))
+        .distinct()
+        .collect()
     ]
     old_raw_batch_days = storage.read_table(
         spark, path("raw_statements")
@@ -174,13 +176,13 @@ def supplement_corpus(
     # over the url-sorted raw files — instead of a semi-join that decodes
     # the url column of the whole log.
     new_urls = new_pages.select("url").distinct()
-    new_url_rows = new_urls.limit(gather_isin_max + 1).collect()
+    new_url_rows = new_urls.limit(GATHER_ISIN_MAX + 1).collect()
     # NULL urls are dropped from the literal lists: a semi-join never
     # matches a NULL key, so isin (same semantics) stays equivalent —
     # and sorted() would raise on None
     new_url_list = (
         sorted(r["url"] for r in new_url_rows if r["url"] is not None)
-        if len(new_url_rows) <= gather_isin_max
+        if len(new_url_rows) <= GATHER_ISIN_MAX
         else None
     )
     reread = (
@@ -221,12 +223,12 @@ def supplement_corpus(
         old_raw.join(affected, "mk_hash", "left_semi")
         .select("url")
         .distinct()
-        .limit(gather_isin_max + 1)
+        .limit(GATHER_ISIN_MAX + 1)
         .collect()
         if new_url_list is not None
         else None
     )
-    if aff_url_rows is not None and len(aff_url_rows) <= gather_isin_max:
+    if aff_url_rows is not None and len(aff_url_rows) <= GATHER_ISIN_MAX:
         gather_urls = sorted(
             {r["url"] for r in aff_url_rows if r["url"] is not None}
             | set(new_url_list)
@@ -612,7 +614,7 @@ def _finish_supplement(spark, path, inflight_marker: str, new_raw: DataFrame):
     # re-derives everything (deterministically); appending raw first would
     # make that same retry a silent no-op with stale derived tables.
     storage.write_table(
-        new_raw.withColumn("day", day("warc_ts")),
+        new_raw.withColumn("day", storage.day("warc_ts")),
         path("raw_statements"),
         ["day"],
         mode="append",

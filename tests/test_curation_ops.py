@@ -650,30 +650,6 @@ def test_redact_pii(spark):
     assert (got[5]["n_phones"], got[5]["n_ipv4s"], got[5]["n_ssns"]) == (1, 0, 1)
 
 
-def test_winnow_via_paths_equal(spark):
-    """winnow via='explode' (codegen-hash) == via='arrays' (no-shuffle),
-    both hash families, including gram-less docs."""
-    from indra_db_spark.operators.textops import winnow_fingerprints
-
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog repeatedly"),
-        (2, "tiny"),
-        (3, ""),
-        (4, "exactly9!"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    for fam in ("md5", "xxhash64"):
-        a = {
-            r["doc_id"]: (r["n_fps"], r["fps"])
-            for r in winnow_fingerprints(df, hash_fn=fam, via="arrays").collect()
-        }
-        b = {
-            r["doc_id"]: (r["n_fps"], r["fps"])
-            for r in winnow_fingerprints(df, hash_fn=fam, via="explode").collect()
-        }
-        assert a == b and set(a) == {1, 2, 3, 4}
-
-
 def test_curate_corpus_recipe(spark):
     """curate_corpus drops low-quality, non-target-language and
     non-canonical near-dup docs in one pass; both dedup methods agree."""

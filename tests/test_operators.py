@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from indra_db_spark import schemas
 from indra_db_spark.operators.belief import compute_belief
 from indra_db_spark.operators.components import connected_components
-from indra_db_spark.operators.dedup import build_pa_statements, salted_counts
+from indra_db_spark.operators.dedup import build_pa_statements
 from indra_db_spark.operators.distill import distill
 from indra_db_spark.operators.extract import extract_statements
 from indra_db_spark.operators.grounding import ground_statements, resolve_grounding_map
@@ -97,17 +97,6 @@ def raw_small(spark):
         source_expr=synth_source_expr,
     )
     return distill(raw).cache()
-
-
-def test_salted_equals_naive_counts(spark, raw_small):
-    naive = {
-        r["mk_hash"]: r["n"]
-        for r in raw_small.groupBy("mk_hash").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    salted = {
-        r["mk_hash"]: r["n"] for r in salted_counts(raw_small, ["mk_hash"]).collect()
-    }
-    assert naive == salted
 
 
 def test_salted_pa_equals_unsalted_pa(spark, raw_small):
@@ -477,10 +466,10 @@ def test_refinement_mutant_supports_bare(spark):
 
 
 def test_ground_statements_shuffle_fallback_equals_broadcast(spark, monkeypatch):
-    """An over-threshold grounding map must not be broadcast: with the
-    hint dropped (broadcast_map=False, or auto mode over a forced-tiny
-    GROUNDING_BROADCAST_MAX_ROWS) the three grounding joins plan as
-    shuffle joins and produce byte-identical raw statements."""
+    """An over-threshold grounding map must not be broadcast: in auto mode
+    over a forced-tiny GROUNDING_BROADCAST_MAX_ROWS the three grounding
+    joins plan as shuffle joins and produce byte-identical raw statements
+    to the default (broadcast) plan."""
     from indra_db_spark.operators import grounding as g_mod
 
     extracted = extract_statements(synth_pages(spark, 60, seed=42))
@@ -493,20 +482,15 @@ def test_ground_statements_shuffle_fallback_equals_broadcast(spark, monkeypatch)
             for r in df.collect()
         )
 
-    bcast = ground_statements(
-        extracted, gm, source_expr=synth_source_expr, broadcast_map=True
+    bcast = ground_statements(extracted, gm, source_expr=synth_source_expr)
+    assert "BroadcastHashJoin" in (
+        bcast._jdf.queryExecution().executedPlan().toString()
     )
     want = snap(bcast)
     assert want
 
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        shuf = ground_statements(
-            extracted, gm, source_expr=synth_source_expr, broadcast_map=False
-        )
-        plan = shuf._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" not in plan, plan
-        assert snap(shuf) == want
         # auto mode: a map bigger than the bound flips to the fallback
         monkeypatch.setattr(g_mod, "GROUNDING_BROADCAST_MAX_ROWS", 0)
         auto = g_mod.ground_statements(

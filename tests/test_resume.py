@@ -83,6 +83,59 @@ def test_mid_stage_partition_resume(spark):
         shutil.rmtree(out2, ignore_errors=True)
 
 
+def test_partial_resume_keeps_undated_pages(spark):
+    """A page without a crawl timestamp lands in the 'undated' day
+    partition; a partial resume that lost that partition must re-extract
+    the page (a NULL day would make the ``not in done days`` filter drop
+    it), converging to the uninterrupted run's output."""
+    import datetime as dt
+
+    schema = "url string, warc_ts timestamp, html binary, text string, lang string"
+    pages = spark.createDataFrame(
+        [
+            ("https://ex0.org/a", dt.datetime(2024, 3, 1), None,
+             "EGFRGEN activates KRASGEN.", "en"),
+            ("https://ex0.org/b", dt.datetime(2024, 3, 2), None,
+             "AKT1GEN binds MTORGEN.", "en"),
+            ("https://ex1.org/c", None, None, "BRAFGEN activates KRASGEN.", "en"),
+        ],
+        schema,
+    )
+    out1 = tempfile.mkdtemp(prefix="kg_resU_")
+    out2 = tempfile.mkdtemp(prefix="kg_resV_")
+    try:
+        r1 = run_pipeline(spark, pages, out1, pages_fingerprint="u",
+                          source_expr=synth_source_expr)
+        snap = read_manifest(f"{out1}/pa_statements")["snapshot_id"]
+        run_pipeline(spark, pages, out2, pages_fingerprint="u",
+                     source_expr=synth_source_expr)
+        # lose the stage commit and every non-date partition (data and
+        # manifest); the two dated days stay done
+        stage_dir = f"{out2}/_manifest/stage=raw_statements"
+        os.remove(os.path.join(stage_dir, "_stage.json"))
+        for p in glob.glob(os.path.join(stage_dir, "part=*.json")):
+            if not str(json.load(open(p))["partition"]).startswith("2024-"):
+                os.remove(p)
+        for d in glob.glob(f"{out2}/raw_statements/day=*"):
+            if not os.path.basename(d).startswith("day=2024-"):
+                shutil.rmtree(d)
+        for s in ["pa_base", "pa_link", "components", "belief", "meta"]:
+            os.remove(f"{out2}/_manifest/stage={s}/_stage.json")
+
+        r2 = run_pipeline(spark, pages, out2, pages_fingerprint="u",
+                          source_expr=synth_source_expr)
+        assert "raw_statements" not in r2.skipped
+        assert sorted(
+            map(tuple, r2.tables["raw_statements"].select("raw_id", "day").collect())
+        ) == sorted(
+            map(tuple, r1.tables["raw_statements"].select("raw_id", "day").collect())
+        )
+        assert read_manifest(f"{out2}/pa_statements")["snapshot_id"] == snap
+    finally:
+        shutil.rmtree(out1, ignore_errors=True)
+        shutil.rmtree(out2, ignore_errors=True)
+
+
 def test_changed_fingerprint_invalidates(spark):
     out = tempfile.mkdtemp(prefix="kg_resC_")
     try:

@@ -184,7 +184,7 @@ def test_supplement_preserves_undated_kb_evidence(spark):
 
     from indra_db_spark.operators.dedup import build_evidence
     from indra_db_spark.sources.knowledgebase import load_knowledgebase
-    from indra_db_spark.sources.storage import read_table, write_table
+    from indra_db_spark.sources.storage import day, read_table, write_table
 
     base = tempfile.mkdtemp(prefix="kg_kb_")
     schema = "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -205,10 +205,7 @@ def test_supplement_preserves_undated_kb_evidence(spark):
              ("Inhibition", "HGNC", "10004", "BRAF", "HGNC", "10007", "MYC")],
         )
         write_table(
-            kb.withColumn(
-                "day",
-                F.coalesce(F.date_format("warc_ts", "yyyy-MM-dd"), F.lit("undated")),
-            ),
+            kb.withColumn("day", day("warc_ts")),
             f"{base}/raw_statements", ["day"], mode="append",
         )
         all_raw = read_table(spark, f"{base}/raw_statements").drop("day")
@@ -237,6 +234,62 @@ def test_supplement_preserves_undated_kb_evidence(spark):
         assert "EGFRGEN activates KRASGEN." not in texts
     finally:
         shutil.rmtree(base, ignore_errors=True)
+
+
+def test_supplement_mixed_dated_undated_batch_equals_rebuild(spark):
+    """A batch mixing a dated page and an undated one (NULL warc_ts) must
+    equal a full rebuild of old ∪ new — the undated rows in the literal
+    'undated' day partition of raw_statements AND evidence — and
+    re-applying the batch must change nothing."""
+    import datetime as dt
+
+    schema = "url string, warc_ts timestamp, html binary, text string, lang string"
+    old_rows = [
+        ("https://ex0.org/a", dt.datetime(2024, 3, 1), None,
+         "EGFRGEN activates KRASGEN.", "en"),
+        ("https://ex0.org/b", dt.datetime(2024, 3, 2), None,
+         "AKT1GEN binds MTORGEN.", "en"),
+    ]
+    new_rows = [
+        ("https://ex1.org/c", dt.datetime(2024, 3, 9), None,
+         "BRAFGEN activates KRASGEN.", "en"),
+        # shares a statement with page a, plus one of its own
+        ("https://ex1.org/d", None, None,
+         "EGFRGEN activates KRASGEN. MYCGEN binds JUNGEN.", "en"),
+    ]
+
+    def snap(tables):
+        return {
+            "pa": _pa_snapshot(tables["pa_statements"]),
+            "ev": sorted(map(tuple, tables["evidence"]
+                             .select("mk_hash", "raw_id", "day").collect())),
+            "raw": sorted(map(tuple, tables["raw_statements"]
+                              .select("raw_id", "day").collect())),
+            "groups": sorted(map(tuple, tables["pa_groups"]
+                                 .select("mk_hash", "component_id").collect())),
+        }
+
+    inc = tempfile.mkdtemp(prefix="kg_undated_")
+    full = tempfile.mkdtemp(prefix="kg_undated_full_")
+    try:
+        run_pipeline(spark, spark.createDataFrame(old_rows, schema), inc,
+                     pages_fingerprint="u0", source_expr=synth_source_expr)
+        batch = spark.createDataFrame(new_rows, schema)
+        got = snap(supplement_corpus(spark, inc, batch,
+                                     source_expr=synth_source_expr))
+        want = snap(run_pipeline(
+            spark, spark.createDataFrame(old_rows + new_rows, schema), full,
+            pages_fingerprint="u1", source_expr=synth_source_expr,
+        ).tables)
+        assert got == want
+        assert {d for _, d in got["raw"]} >= {"undated", "2024-03-09"}
+        assert "undated" in {d for _, _, d in got["ev"]}
+        again = snap(supplement_corpus(spark, inc, batch,
+                                       source_expr=synth_source_expr))
+        assert again == want
+    finally:
+        shutil.rmtree(inc, ignore_errors=True)
+        shutil.rmtree(full, ignore_errors=True)
 
 
 def test_streaming_wrapper(spark):
@@ -577,12 +630,14 @@ def test_crash_between_link_and_groups_writes_then_retry(spark, monkeypatch):
         shutil.rmtree(full, ignore_errors=True)
 
 
-def test_gather_isin_fallback_equals_pruned_path(spark):
+def test_gather_isin_fallback_equals_pruned_path(spark, monkeypatch):
     """The evidence gather's two modes — pruned filter-pushed read
     (dirty urls collectable) vs semi-join full scan (over the cap) —
-    must produce identical corpora; gather_isin_max=0 forces the
+    must produce identical corpora; GATHER_ISIN_MAX=0 forces the
     fallback on an otherwise identical supplement."""
     import datetime as dt
+
+    from indra_db_spark.streaming import supplement
 
     schema = "url string, warc_ts timestamp, html binary, text string, lang string"
     old_rows = [
@@ -610,14 +665,16 @@ def test_gather_isin_fallback_equals_pruned_path(spark):
     outs = {}
     bases = []
     try:
-        for mode, cap in (("pruned", 20_000), ("fallback", 0)):
+        for mode in ("pruned", "fallback"):
+            if mode == "fallback":
+                monkeypatch.setattr(supplement, "GATHER_ISIN_MAX", 0)
             base = tempfile.mkdtemp(prefix=f"kg_gather_{mode}_")
             bases.append(base)
             run_pipeline(spark, spark.createDataFrame(old_rows, schema), base,
                          pages_fingerprint="g0", source_expr=synth_source_expr)
             tables = supplement_corpus(
                 spark, base, spark.createDataFrame(new_rows, schema),
-                source_expr=synth_source_expr, gather_isin_max=cap,
+                source_expr=synth_source_expr,
             )
             outs[mode] = {
                 "pa": _pa_snapshot(tables["pa_statements"]),

@@ -5,10 +5,10 @@ inputs are not kept on disk between sessions).
 This is NOT the correctness dataset: the DuckDB oracle gate runs against
 /root/testdata/sf0.01, which is driver-generated and read-only. The output
 of this script lives outside /root/testdata (default /root/bigdata/sf<sf>)
-and is only ever referenced through $SPARK_GRAFT_SF_DIR by bench_extra.py /
-bench.py when iterating on optimizations at the scale the driver measures
-(BENCH_r05.json records sf=1.0: documents 50k, events 1M, embeddings 20k,
-lineitem 6M, orders 1.5M).
+and is referenced through $SPARK_GRAFT_SF_DIR by bench.py when iterating on
+optimizations at sf1.0 scale (BENCH_r05.json records
+sf=1.0: documents 50k, events 1M, embeddings 20k, lineitem 6M, orders
+1.5M); perfbench's query suite calls ``gen`` directly at a small scale.
 
 Distributions mirror what /root/testdata/sf0.1 exhibits (profiled in
 OPTIMIZATION_r06.md): 31-word vocabulary, uniform 10..100-word docs,

@@ -5,7 +5,12 @@ For each audited query: does the filter reach the parquet scan
 strategies got picked, and how wide are the WholeStageCodegen spans.
 This is the '.explain and iterate' evidence the scale review asks for.
 
-Usage: python tools/plan_audit.py [sf_dir]
+Usage: python tools/plan_audit.py [sf_dir] [--plans DIR [query ...]]
+
+``--plans DIR`` writes each query's ``explain("formatted")`` text to
+``DIR/<query>.txt`` (default: the AUDIT list; any query of
+``__spark_entry__.queries()`` is accepted) and leaves PLANS.md alone —
+diff two such dumps to compare the plans of two checkouts.
 """
 
 from __future__ import annotations
@@ -46,14 +51,40 @@ JOIN_PAT = re.compile(
 )
 
 
+def _formatted(df) -> str:
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    args = sys.argv[1:]
+    plans_dir = None
+    if "--plans" in args:
+        i = args.index("--plans")
+        if i + 1 == len(args):
+            sys.exit("usage: plan_audit.py [sf_dir] [--plans DIR [query ...]]")
+        plans_dir, names = args[i + 1], args[i + 2 :] or AUDIT
+        args = args[:i]
+    sf_dir = args[0] if args else "/root/testdata/sf0.01"
 
     import __spark_entry__ as em
     from indra_db_spark.session import get_spark
 
     spark = get_spark(app_name="plan_audit", master="local[8]")
     qs = em.queries()
+
+    if plans_dir is not None:
+        unknown = [n for n in names if n not in qs]
+        if unknown:
+            sys.exit(f"unknown queries: {unknown}")
+        os.makedirs(plans_dir, exist_ok=True)
+        for name in names:
+            with open(os.path.join(plans_dir, f"{name}.txt"), "w") as f:
+                f.write(_formatted(qs[name](spark, sf_dir)))
+        print(f"wrote {len(names)} plans to {plans_dir}")
+        return
 
     out = [
         "# PLANS — physical-plan audit (generated by tools/plan_audit.py)",
@@ -63,11 +94,7 @@ def main() -> None:
         "",
     ]
     for name in AUDIT:
-        df = qs[name](spark, sf_dir)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        p = buf.getvalue()
+        p = _formatted(qs[name](spark, sf_dir))
         pushed = [l.strip() for l in p.splitlines() if "PushedFilters" in l and "[]" not in l]
         schemas = [
             l.strip()[len("ReadSchema: ") :]

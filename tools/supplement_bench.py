@@ -149,11 +149,9 @@ def main() -> None:
     base_wall = time.time() - t0
 
     batch, n_distinct_stmts = batch_pages(spark, n_batch)
-    import pyspark.sql.functions as SF
+    from indra_db_spark.sources.storage import day
 
-    batch_days = batch.select(
-        SF.date_format("warc_ts", "yyyy-MM-dd").alias("d")
-    ).distinct().count()
+    batch_days = batch.select(day("warc_ts").alias("d")).distinct().count()
     base_raw_days = len(_partition_mtimes(f"{base_dir}/raw_statements"))
     pre = {
         t: _partition_mtimes(f"{base_dir}/{t}")
