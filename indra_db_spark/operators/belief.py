@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from indra_db_spark import schemas
 from indra_db_spark.operators.meta import KB_PREFIX
 
 # Sources with no prior row still contribute evidence — the reference
@@ -92,8 +93,4 @@ def with_belief(
         .join(b, "mk_hash", "left")
         .withColumn("belief", F.coalesce("belief", F.lit(0.0)))
     )
-    # registry column order (schemas.PA_STATEMENTS)
-    return out.select(
-        "mk_hash", "matches_key", "type", "subj", "obj", "mods",
-        "ev_count", "src_counts", "belief", "agent_count",
-    )
+    return out.select(*schemas.PA_STATEMENTS.names)

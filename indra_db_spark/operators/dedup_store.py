@@ -52,11 +52,11 @@ Crash-safety (each step idempotent, manifest written last):
      partitions are backed up to staging, rewritten via
      ``storage.scoped_overwrite``, and ONLY THEN the ledger commits.
 
-Commit cost is O(batch), really: every write passes
-``compute_signature=False, recount=False`` — the manifest's whole-table
-content hash and footer recount are rebuild-time audit features; here
-the LEDGER is the commit pointer and re-hashing a 100-TB corpus to
-append one crawl batch would defeat the contract above.
+Commit cost is O(batch), really: per-batch writes are partition-scoped
+(``overwrite_partitions``), and storage's commit rule (the
+``sources/storage.py`` module docstring) records only the rows such a
+write observed — no whole-table content hash or footer recount. The
+LEDGER, not the manifest, is this store's commit pointer.
 
 Equivalence invariant (property-tested in tests/test_dedup_store.py):
 after any sequence of ``ingest`` calls — including retries after
@@ -281,19 +281,12 @@ class DedupStore:
     # write protocol
     def _write_batch_tables(self, batch_id: str, b: DataFrame, fps: DataFrame,
                             buckets: DataFrame) -> None:
-        # compute_signature/recount off: the default manifest extras
-        # re-read and content-hash the WHOLE table per commit — O(corpus)
-        # work that would defeat the store's O(batch) commit contract
-        # (the ledger, not the manifest snapshot, is this store's
-        # correctness pointer)
         for table, df in (("docs", b), ("doc_fps", fps), ("fp_buckets", buckets)):
             storage.write_table(
                 df.withColumn("batch_id", F.lit(batch_id)),
                 self._path(table),
                 ["batch_id"],
                 mode="overwrite_partitions",
-                compute_signature=False,
-                recount=False,
             )
 
     def _restore_staging(self, batch_id: str) -> None:
@@ -417,8 +410,7 @@ class DedupStore:
         self._write_batch_tables(batch_id, b, idx.doc_fps, idx.fp_buckets)
         clustered = clusters.withColumn("_b", F.lit(batch_id))
         storage.write_table(
-            clustered, self._path("clusters"), ["_b"], mode="overwrite",
-            compute_signature=False,
+            clustered, self._path("clusters"), ["_b"], mode="overwrite"
         )
         self._commit(batch_id)
         return {
@@ -473,8 +465,7 @@ class DedupStore:
             )
             self._backup_partitions(batch_id, affected)
             storage.scoped_overwrite(
-                content, self._path("clusters"), "_b", affected,
-                compute_signature=False, recount=False,
+                content, self._path("clusters"), "_b", affected
             )
         self._commit(batch_id)
         shutil.rmtree(self._staging(batch_id), ignore_errors=True)
@@ -564,8 +555,6 @@ class DedupStore:
             self._path("clusters"),
             ["_b"],
             mode="overwrite_partitions",
-            compute_signature=False,
-            recount=False,
         )
         self._swap_ledger([compacted_id])
         removed = self._gc({compacted_id})

@@ -18,7 +18,9 @@ from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from indra_db_spark import schemas
 from indra_db_spark.functions.hashing import (
     fold_md5_64,
     matches_key_expr,
@@ -64,9 +66,8 @@ def resolve_grounding_map(grounding_map: DataFrame) -> DataFrame:
 # normalized text is exactly what a 1000-executor plan should do.
 GROUNDING_BROADCAST_MAX_ROWS = 2_000_000
 
-_MUTS_DDL = "array<struct<position:string,residue_from:string,residue_to:string>>"
-_ACT_DDL = "struct<activity_type:string,is_active:boolean>"
-_BOUNDS_DDL = "array<struct<db_ns:string,db_id:string,name:string,is_bound:boolean>>"
+_MUTS = T.ArrayType(schemas.MUT)
+_BOUNDS = T.ArrayType(schemas.BOUND)
 
 
 def _agent_conditions(side: str):
@@ -81,9 +82,9 @@ def _agent_conditions(side: str):
     """
     if side != "subj":
         return (
-            F.array().cast(_MUTS_DDL),
-            F.lit(None).cast(_ACT_DDL),
-            F.array().cast(_BOUNDS_DDL),
+            F.array().cast(_MUTS),
+            F.lit(None).cast(schemas.ACTIVITY),
+            F.array().cast(_BOUNDS),
         )
     muts = F.when(
         F.col("subj_mut_pos").isNotNull(),
@@ -94,14 +95,14 @@ def _agent_conditions(side: str):
                 F.col("subj_mut_to").alias("residue_to"),
             )
         ),
-    ).otherwise(F.array().cast(_MUTS_DDL))
+    ).otherwise(F.array().cast(_MUTS))
     act = F.when(
         F.col("subj_act").isNotNull(),
         F.struct(
             F.lit("activity").alias("activity_type"),
             (F.col("subj_act") == "active").alias("is_active"),
         ),
-    ).otherwise(F.lit(None).cast(_ACT_DDL))
+    ).otherwise(F.lit(None).cast(schemas.ACTIVITY))
     bounds = F.when(
         F.col("subj_bound_text").isNotNull(),
         F.array(
@@ -112,7 +113,7 @@ def _agent_conditions(side: str):
                 (~F.coalesce(F.col("subj_bound_neg"), F.lit(False))).alias("is_bound"),
             )
         ),
-    ).otherwise(F.array().cast(_BOUNDS_DDL))
+    ).otherwise(F.array().cast(_BOUNDS))
     return muts, act, bounds
 
 
@@ -216,7 +217,7 @@ def ground_statements(
                 F.lit(True).alias("is_modified"),
             )
         ),
-    ).otherwise(F.array().cast("array<struct<mod_type:string,residue:string,position:string,is_modified:boolean>>"))
+    ).otherwise(F.array().cast(T.ArrayType(schemas.MOD)))
     df = df.withColumn("mods", mods)
 
     mk = matches_key_expr(F.col("type"), F.col("subj"), F.col("obj"), F.col("mods"))
@@ -242,9 +243,5 @@ def ground_statements(
                 F.col("matches_key"),
             ),
         )
-        .select(
-            "raw_id", "url", "extractor", "extractor_version", "type",
-            "subj", "obj", "mods", "mk_hash", "source_hash",
-            "evidence_text", "warc_ts", "lang", "source", "matches_key",
-        )
+        .select(*schemas.RAW_STATEMENTS.names)
     )

@@ -118,8 +118,7 @@ def run_pipeline(
             extra[f"{tbl}_snapshot"] = m.get("snapshot_id")
             res.tables[tbl] = storage.read_table(spark, path(tbl))
         wall = time.time() - t0
-        part_counts = outputs.pop("_partition_counts", None)
-        log.commit_stage(stage, fp, wall, rows_total, part_counts, **extra)
+        log.commit_stage(stage, fp, wall, rows_total, **extra)
         res.metrics[stage] = log.read(stage) or {}
 
     # ---- stage 1: extract + ground → raw_statements (day-partitioned,
@@ -182,8 +181,7 @@ def run_pipeline(
         # gather (streaming/supplement.py step 4) skips the row groups of
         # untouched urls instead of decoding the whole fat log
         storage.write_table(
-            raw, path("raw_statements"), ["day"], mode=mode,
-            compute_signature=False, sort_by=["url"],
+            raw, path("raw_statements"), ["day"], mode=mode, sort_by=["url"]
         )
         back = storage.read_table(spark, path("raw_statements"))
         pc = {

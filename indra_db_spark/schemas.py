@@ -134,6 +134,8 @@ RAW_STATEMENTS = T.StructType(
         T.StructField("evidence_text", T.StringType(), True),
         T.StructField("warc_ts", T.TimestampType(), True),
         T.StructField("lang", T.StringType(), True),
+        T.StructField("source", T.StringType(), True),
+        T.StructField("matches_key", T.StringType(), False),
     ]
 )
 

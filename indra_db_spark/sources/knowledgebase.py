@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from indra_db_spark import schemas
 from indra_db_spark.functions.hashing import (
     fold_md5_64,
     matches_key_expr,
@@ -49,13 +50,9 @@ def load_knowledgebase(
         else local_df(spark, triples, KB_TRIPLE)
     )
     source = f"kb_{name}"
-    no_muts = F.array().cast(
-        "array<struct<position:string,residue_from:string,residue_to:string>>"
-    )
-    no_act = F.lit(None).cast("struct<activity_type:string,is_active:boolean>")
-    no_bounds = F.array().cast(
-        "array<struct<db_ns:string,db_id:string,name:string,is_bound:boolean>>"
-    )
+    no_muts = F.array().cast(T.ArrayType(schemas.MUT))
+    no_act = F.lit(None).cast(schemas.ACTIVITY)
+    no_bounds = F.array().cast(T.ArrayType(schemas.BOUND))
     from indra_db_spark.operators.grounding import regularize_agent_id
 
     # Regularize ids exactly like the reading path (grounding.py::
@@ -72,9 +69,7 @@ def load_knowledgebase(
         no_act.alias("activity"),
         no_bounds.alias("bounds"),
     )
-    empty_mods = F.array().cast(
-        "array<struct<mod_type:string,residue:string,position:string,is_modified:boolean>>"
-    )
+    empty_mods = F.array().cast(T.ArrayType(schemas.MOD))
     df = (
         df.withColumn("subj", agent("subj"))
         .withColumn("obj", agent("obj"))
@@ -97,8 +92,4 @@ def load_knowledgebase(
         .withColumn("warc_ts", F.lit(None).cast("timestamp"))
         .withColumn("lang", F.lit("en"))
     )
-    return df.select(
-        "raw_id", "url", "extractor", "extractor_version", "type",
-        "subj", "obj", "mods", "mk_hash", "source_hash",
-        "evidence_text", "warc_ts", "lang", "source", "matches_key",
-    )
+    return df.select(*schemas.RAW_STATEMENTS.names)

@@ -8,11 +8,23 @@ id (content hash), row count, and parent snapshot — giving atomic-pointer
 semantics (manifest written last) and idempotent overwrite-by-partition.
 
 Write modes mirror indra_db/databases.py::DatabaseManager.copy_* bulk-load
-semantics:
-  * ``overwrite``            — copy_push (replace)
-  * ``append``               — copy
-  * ``append_lazy``          — copy_lazy: left-anti on key before append
-  * dynamic partition overwrite — per-partition idempotent rewrite
+semantics. The mode alone decides what the manifest costs — every
+manifest records ``rows_written`` (this job's rows, observed on the
+write itself), and only a full overwrite may re-read the table:
+  * ``overwrite``            — copy_push (replace). ``row_count`` is the
+    write's own observed count; ``snapshot_id`` (a content hash that
+    re-reads the whole table) only when ``compute_signature`` is set —
+    determinism evidence for rebuilds.
+  * ``append``               — copy. ``row_count`` carries forward
+    (prior count + rows written; omitted once any prior commit omitted
+    it); never hashed.
+  * ``append_lazy``          — copy_lazy: left-anti on key before append.
+  * ``overwrite_partitions`` — dynamic partition overwrite, a
+    per-partition idempotent rewrite (``scoped_overwrite``). Records
+    ``rows_written`` only.
+Appends and partition-scoped writes therefore always commit in
+O(batch): an incremental caller (the supplement, the dedup store) never
+re-hashes or recounts a corpus to commit a batch.
 """
 
 from __future__ import annotations
@@ -23,6 +35,10 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+# Files per partition value of a partitioned write (the within-partition
+# splitter below)
+FILES_PER_PARTITION = 8
 
 
 def day(col):
@@ -82,23 +98,12 @@ def write_table(
     path: str,
     partition_by: list[str] | None = None,
     mode: str = "overwrite",
-    compute_signature: bool = True,
-    files_per_partition: int = 8,
+    compute_signature: bool = False,
     sort_by: list[str] | None = None,
     input_clustered: bool = False,
-    recount: bool = True,
 ) -> dict:
-    """Write a table + manifest; returns the manifest dict.
-
-    ``compute_signature=False`` + ``recount=False`` is the O(batch)
-    commit: by default an ``overwrite_partitions``/``append`` write
-    re-reads the WHOLE table to produce the manifest's ``snapshot_id``
-    (full content hash) and ``row_count`` (footer recount) — determinism
-    evidence worth paying for on rebuild outputs, but a per-batch
-    incremental commit (dedup_store, supplement) re-hashing a 100-TB
-    corpus to append 10k rows defeats the O(batch) contract. With
-    ``recount=False`` the manifest records ``rows_written`` (this job's
-    observed rows) and omits the table-wide ``row_count``.
+    """Write a table + manifest; returns the manifest dict. What the
+    manifest records per ``mode`` is the module docstring's commit rule.
 
     ``sort_by``: sortWithinPartitions before writing — parquet min/max
     column stats then prune row groups for point lookups on those columns
@@ -113,11 +118,15 @@ def write_table(
     """
     from pyspark.sql import Observation
 
-    if partition_by and input_clustered:
-        partitioning_needed = False
-    else:
-        partitioning_needed = bool(partition_by)
-    if partitioning_needed:
+    if mode not in ("overwrite", "append", "overwrite_partitions"):
+        raise ValueError(f"unknown write mode {mode!r}")
+    if mode == "overwrite_partitions" and not partition_by:
+        raise ValueError("overwrite_partitions requires partition_by")
+    if compute_signature and mode != "overwrite":
+        raise ValueError(
+            f"compute_signature requires mode='overwrite', not {mode!r}"
+        )
+    if partition_by and not input_clustered:
         # Cluster rows by partition value before a partitioned write:
         # otherwise every task emits one file per partition value
         # (tasks × values files) and the driver-side commit of thousands
@@ -126,27 +135,12 @@ def write_table(
         # repartition(day) caps encoding at #days concurrent tasks).
         # Hash a spread of NON-partition columns (first-column-only
         # degenerates to constant when that column is the partition key or
-        # a per-partition constant, collapsing write parallelism); maps are
-        # not xxhash64-able, canonicalize via _hashable.
-        from pyspark.sql.types import MapType
-
-        split_cols = []
-        for f_ in df.schema.fields:
-            if f_.name in partition_by:
-                continue
-            c = F.col(f_.name)
-            if isinstance(f_.dataType, MapType):
-                c = F.array_sort(F.map_entries(c))
-            split_cols.append(c)
-        split_cols = split_cols[:4] or [F.lit(1)]
-        split = F.pmod(F.xxhash64(*split_cols), F.lit(files_per_partition))
+        # a per-partition constant, collapsing write parallelism).
+        split_cols = _hashable(df.drop(*partition_by))[:4] or [F.lit(1)]
+        split = F.pmod(F.xxhash64(*split_cols), F.lit(FILES_PER_PARTITION))
         df = df.repartition(*partition_by, split)
     if sort_by:
         df = df.sortWithinPartitions(*sort_by)
-    if mode not in ("overwrite", "append", "overwrite_partitions"):
-        raise ValueError(f"unknown write mode {mode!r}")
-    if mode == "overwrite_partitions" and not partition_by:
-        raise ValueError("overwrite_partitions requires partition_by")
     obs = Observation()
     observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
     writer = observed.write.mode("overwrite" if mode != "append" else "append")
@@ -167,49 +161,28 @@ def write_table(
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     else:
         writer.parquet(path)
-    n_rows = obs.get["rows"]
-    rows_written = n_rows
-    if mode == "overwrite_partitions":
-        # written-rows ≠ table rows (untouched partitions persist):
-        # recount from footers — a metadata-only job for parquet, but
-        # still O(table files); incremental commits skip it (recount=False)
-        n_rows = (
-            df.sparkSession.read.schema(df.schema).parquet(path).count()
-            if recount
-            else None
-        )
-    if mode == "append":
-        # the manifest describes the TABLE, not the batch — accumulate the
-        # prior manifest's count so audits reading row_count stay truthful
-        prior_path = os.path.join(path, "_table_manifest.json")
-        if os.path.exists(prior_path):
-            try:
-                with open(prior_path) as f:
-                    prior_count = json.load(f).get("row_count")
-                # a prior fast commit omitted row_count — accumulating
-                # from 0 would silently undercount, so stay unknown
-                n_rows = (
-                    n_rows + prior_count if prior_count is not None else None
-                )
-            except (json.JSONDecodeError, OSError):
-                pass
+    rows_written = obs.get["rows"]
     manifest = {
         "format": "parquet-shim-v1",
         "schema": df.schema.jsonValue(),
         "partition_by": partition_by or [],
         "committed_at_unix": int(time.time()),
-        # observed rows of THIS job — always O(batch) (Observation)
         "rows_written": rows_written,
     }
-    if n_rows is not None:
-        # table-wide count piggybacks on the write job (Observation) for
-        # full overwrites; recounted/accumulated otherwise, unless the
-        # commit opted out (recount=False)
-        manifest["row_count"] = n_rows
+    if mode == "overwrite":
+        manifest["row_count"] = rows_written
+    elif mode == "append":
+        # the manifest describes the TABLE, not the batch — accumulate the
+        # prior manifest's count so audits reading row_count stay truthful;
+        # a prior commit that omitted row_count leaves it unknown
+        # (accumulating from 0 would silently undercount)
+        prior = read_manifest(path)
+        if prior is None:
+            manifest["row_count"] = rows_written
+        elif prior.get("row_count") is not None:
+            manifest["row_count"] = rows_written + prior["row_count"]
     if compute_signature:
-        # full content hash — determinism evidence; skipped in bench jobs
-        spark = df.sparkSession
-        back = spark.read.schema(df.schema).parquet(path)
+        back = df.sparkSession.read.schema(df.schema).parquet(path)
         _, h = _content_signature(back.select(*sorted(back.columns)))
         manifest["snapshot_id"] = h
     _write_json_atomic(os.path.join(path, "_table_manifest.json"), manifest)
@@ -256,39 +229,30 @@ def write_bucketed_table(
 
 
 def scoped_overwrite(
-    df: DataFrame,
-    table_path: str,
-    part_col: str,
-    scope_values: list,
-    compute_signature: bool = True,
-    recount: bool = True,
+    df: DataFrame, table_path: str, part_col: str, scope_values: list
 ) -> None:
-    """Dynamic-partition-overwrite ``df`` (already restricted to the
-    ``scope_values`` partitions) into ``table_path``, dropping any scoped
-    partition whose every row vanished — dynamic overwrite can only
-    REPLACE partitions present in the frame, so an emptied partition
-    would otherwise survive as a stale directory (the shim analog of
-    Iceberg's delete-files). ``df`` must be materialized (checkpointed)
-    by the caller: the plan reads the very files this write deletes."""
+    """Replace the ``scope_values`` partitions of ``table_path`` with
+    ``df``'s rows in them, as an O(batch) ``overwrite_partitions`` commit.
+
+    Rows of ``df`` outside the scope are dropped: dynamic overwrite would
+    otherwise replace each such row's whole partition with just that
+    row. A scoped partition whose every row vanished is deleted — dynamic
+    overwrite can only REPLACE partitions present in the frame, so an
+    emptied partition would otherwise survive as a stale directory (the
+    shim analog of Iceberg's delete-files). ``df`` must be materialized
+    (checkpointed) by the caller: the plan reads the very files this
+    write deletes."""
     import shutil
 
+    df = df.where(F.col(part_col).isin(list(scope_values)))
     surviving = {r[part_col] for r in df.select(part_col).distinct().collect()}
     for v in scope_values:
         if v not in surviving:
             shutil.rmtree(f"{table_path}/{part_col}={v}", ignore_errors=True)
-    write_table(
-        df,
-        table_path,
-        [part_col],
-        mode="overwrite_partitions",
-        compute_signature=compute_signature,
-        recount=recount,
-    )
+    write_table(df, table_path, [part_col], mode="overwrite_partitions")
 
 
-def append_lazy(
-    df: DataFrame, path: str, key_cols: list[str], partition_by: list[str] | None = None
-) -> dict:
+def append_lazy(df: DataFrame, path: str, key_cols: list[str]) -> dict:
     """copy_lazy analog: append only rows whose key is not present."""
     spark = df.sparkSession
     if os.path.exists(os.path.join(path, "_table_manifest.json")):
@@ -299,7 +263,7 @@ def append_lazy(
         # the USING anti-join moves key_cols first — restore the caller's
         # order so the appended manifest schema matches the first write's
         df = df.join(existing, key_cols, "left_anti").select(*cols)
-    return write_table(df, path, partition_by, mode="append")
+    return write_table(df, path, mode="append")
 
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:

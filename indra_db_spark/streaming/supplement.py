@@ -35,6 +35,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from indra_db_spark import schemas
 from indra_db_spark.operators import belief as belief_op
 from indra_db_spark.operators import dedup as dedup_op
 from indra_db_spark.operators import distill as distill_op
@@ -49,9 +50,6 @@ from indra_db_spark.sources import dims as dims_mod
 from indra_db_spark.sources import storage
 from indra_db_spark.pipeline import bucket
 
-
-# shared with the incremental-dedup store (operators/dedup_store.py)
-_scoped_overwrite = storage.scoped_overwrite
 
 # Per-source cap on the url sets the evidence gather collects so it can
 # run as a pruned, filter-pushed read of the raw log — batch urls and
@@ -329,10 +327,7 @@ def supplement_corpus(
     merged_final = (
         merged_pa_base.join(beliefs, "mk_hash", "left")
         .withColumn("belief", F.coalesce("belief", F.lit(0.0)))
-        .select(
-            "mk_hash", "matches_key", "type", "subj", "obj", "mods",
-            "ev_count", "src_counts", "belief", "agent_count",
-        )
+        .select(*schemas.PA_STATEMENTS.names)
         .withColumn("bucket", bucket("mk_hash"))
         # materialize BEFORE the overwrite below — the plan reads the very
         # pa_statements files the write deletes (read-overwrite-same-path)
@@ -373,17 +368,8 @@ def supplement_corpus(
         .select(*new_ev.columns)
         .localCheckpoint()  # plan reads the files the write replaces
     )
-    # every incremental write is a FAST commit (no whole-table content
-    # hash / footer recount in the manifest — those default extras are
-    # O(corpus) per batch, the same defeat as dedup_store's; rebuilds via
-    # run_pipeline keep them as determinism evidence)
-    _scoped_overwrite(
-        merged_evidence,
-        path("evidence"),
-        "day",
-        aff_day_list,
-        compute_signature=False,
-        recount=False,
+    storage.scoped_overwrite(
+        merged_evidence, path("evidence"), "day", aff_day_list
     )
 
     # pa_statements: bucket-scoped rewrite. A pa row changes only when
@@ -396,13 +382,8 @@ def supplement_corpus(
         r["b"]
         for r in dirty.select(bucket("mk_hash").alias("b")).distinct().collect()
     ]
-    _scoped_overwrite(
-        merged_final.where(F.col("bucket").isin(dirty_buckets)),
-        path("pa_statements"),
-        "bucket",
-        dirty_buckets,
-        compute_signature=False,
-        recount=False,
+    storage.scoped_overwrite(
+        merged_final, path("pa_statements"), "bucket", dirty_buckets
     )
 
     # pa_link: bucket-scoped on pmod(supported_mk_hash) — the changed
@@ -452,13 +433,8 @@ def supplement_corpus(
         inflight_marker,
         {"stage": "pa_link+pa_groups", "batch_days": sorted(batch_days)},
     )
-    _scoped_overwrite(
-        merged_link_b.where(F.col("bucket").isin(link_buckets)),
-        path("pa_link"),
-        "bucket",
-        link_buckets,
-        compute_signature=False,
-        recount=False,
+    storage.scoped_overwrite(
+        merged_link_b, path("pa_link"), "bucket", link_buckets
     )
 
     # pa_groups: INCREMENTAL connected components (VERDICT r4 #2 — this
@@ -514,13 +490,11 @@ def supplement_corpus(
         frame_buckets = {
             r["bucket"] for r in groups_full.select("bucket").distinct().collect()
         }
-        _scoped_overwrite(
+        storage.scoped_overwrite(
             groups_full,
             path("pa_groups"),
             "bucket",
             sorted(disk_buckets | frame_buckets),
-            compute_signature=False,
-            recount=False,
         )
         return _finish_supplement(spark, path, inflight_marker, new_raw)
 
@@ -593,9 +567,8 @@ def supplement_corpus(
             # plan reads the very pa_groups files the write replaces
             .localCheckpoint()
         )
-        _scoped_overwrite(
-            scoped_groups, path("pa_groups"), "bucket", group_buckets,
-            compute_signature=False, recount=False,
+        storage.scoped_overwrite(
+            scoped_groups, path("pa_groups"), "bucket", group_buckets
         )
     return _finish_supplement(spark, path, inflight_marker, new_raw)
 
@@ -618,7 +591,6 @@ def _finish_supplement(spark, path, inflight_marker: str, new_raw: DataFrame):
         path("raw_statements"),
         ["day"],
         mode="append",
-        compute_signature=False,  # append row_count still accumulates O(1)
         sort_by=["url"],  # keep appended files row-group-skippable too
     )
 

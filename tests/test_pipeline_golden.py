@@ -135,6 +135,38 @@ def test_schemas_match_registry(golden):
     ]
 
 
+def test_producers_match_registry(spark):
+    """Each table producer emits exactly its registry entry's columns and
+    types, in order (schemas.py is the one owner of a table's shape)."""
+    from indra_db_spark import schemas
+    from indra_db_spark.operators import belief, dedup, extract, grounding, meta, refine
+    from indra_db_spark.sources import dims
+    from indra_db_spark.sources.knowledgebase import load_knowledgebase
+
+    pages = synth_pages(spark, 5, seed=1)
+    raw = grounding.ground_statements(
+        extract.extract_statements(pages), dims.grounding_map_df(spark)
+    )
+    kb = load_knowledgebase(
+        spark, "signor", [("Activation", "HGNC", "1", "A", "HGNC", "2", "B")]
+    )
+    pa = dedup.build_pa_statements(raw)
+    link = refine.build_pa_link(pa, dims.isa_closure_df(spark))
+    final = belief.with_belief(pa, link, dims.source_priors_df(spark))
+    producers = [
+        (raw, schemas.RAW_STATEMENTS),
+        (kb, schemas.RAW_STATEMENTS),
+        (final, schemas.PA_STATEMENTS),
+        (dedup.build_evidence(raw), schemas.EVIDENCE),
+        (meta.build_name_meta(final), schemas.NAME_META),
+        (meta.build_agent_interactions(final), schemas.AGENT_INTERACTIONS),
+        (extract.extract_mentions(pages), schemas.MENTIONS),
+    ]
+    shape = lambda st: [(f.name, f.dataType.simpleString()) for f in st.fields]
+    for df, entry in producers:
+        assert shape(df.schema) == shape(entry)
+
+
 def test_mutation_and_activity_split_hashes(golden, expected):
     """Two statements differing only by a subject mutation/activity must
     land on DISTINCT mk_hash (PaMuts/PaActivity + matches_key analog)."""

@@ -143,7 +143,7 @@ def contexts(spark, ctx):
     """The plain and the mk_hash-bucketed serving context of one corpus."""
     base = tempfile.mkdtemp(prefix="kg_srv_guard_")
     for name, df in (("pa_statements", ctx.pa_statements), ("evidence", ctx.evidence)):
-        storage.write_table(df, f"{base}/{name}", compute_signature=False)
+        storage.write_table(df, f"{base}/{name}")
     yield {
         "plain": load_context(spark, base),
         "bucketed": load_context(spark, base, bucketed=True),

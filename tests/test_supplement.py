@@ -563,7 +563,7 @@ def test_crash_between_link_and_groups_writes_then_retry(spark, monkeypatch):
     import datetime as dt
     import os
 
-    import indra_db_spark.streaming.supplement as supplement_mod
+    from indra_db_spark.sources import storage
     from indra_db_spark.sources.storage import read_table
 
     base = tempfile.mkdtemp(prefix="kg_crashcc_")
@@ -590,15 +590,15 @@ def test_crash_between_link_and_groups_writes_then_retry(spark, monkeypatch):
         run_pipeline(spark, old_pages, base, pages_fingerprint="ccc0",
                      source_expr=synth_source_expr)
 
-        real = supplement_mod._scoped_overwrite
+        real = storage.scoped_overwrite
 
-        def boom(df, table_path, part_col, scope_values, **kw):
+        def boom(df, table_path, part_col, scope_values):
             if table_path.endswith("pa_groups"):
                 # pa_link is already overwritten; die before pa_groups
                 raise RuntimeError("injected crash")
-            return real(df, table_path, part_col, scope_values, **kw)
+            return real(df, table_path, part_col, scope_values)
 
-        monkeypatch.setattr(supplement_mod, "_scoped_overwrite", boom)
+        monkeypatch.setattr(storage, "scoped_overwrite", boom)
         with pytest.raises(RuntimeError, match="injected crash"):
             supplement_corpus(spark, base, new_pages,
                               source_expr=synth_source_expr)

@@ -1,14 +1,17 @@
-"""Every library name the scripts import resolves (no Spark session).
+"""Every library name the scripts import resolves, and every keyword
+they pass to a library callable is one of its parameters (no Spark
+session).
 
 The scripts in ``tools/`` and ``perfbench/``, ``bench.py`` and
 ``__spark_entry__.py`` import most library names lazily, inside ``main()``
-or a query function, so a deleted or renamed name breaks them only when
-they run. This walks their syntax trees and resolves each
+or a query function, so a deleted or renamed name or parameter breaks
+them only when they run. This walks their syntax trees and resolves each
 ``from indra_db_spark… import name`` / ``from tools… import name``.
 """
 
 import ast
 import importlib
+import inspect
 import pathlib
 
 ROOT = pathlib.Path(__file__).resolve().parent.parent
@@ -20,7 +23,8 @@ PACKAGES = ("indra_db_spark", "tools")
 
 
 def _imports(path):
-    """(module, name, line) per imported name; name None for ``import m``."""
+    """(module, name, local, line) per imported name: name None for
+    ``import m``, local the name the import binds in the script."""
     for node in ast.walk(ast.parse(path.read_text(), str(path))):
         if (
             isinstance(node, ast.ImportFrom)
@@ -28,11 +32,12 @@ def _imports(path):
             and node.module.split(".")[0] in PACKAGES
         ):
             for alias in node.names:
-                yield node.module, alias.name, node.lineno
+                yield node.module, alias.name, alias.asname or alias.name, node.lineno
         elif isinstance(node, ast.Import):
             for alias in node.names:
                 if alias.name.split(".")[0] in PACKAGES:
-                    yield alias.name, None, node.lineno
+                    local = alias.asname or alias.name.split(".")[0]
+                    yield alias.name, None, local, node.lineno
 
 
 def _resolves(module, name):
@@ -49,7 +54,7 @@ def _resolves(module, name):
 def test_script_imports_resolve():
     seen, missing = 0, []
     for path in SCRIPTS:
-        for module, name, line in _imports(path):
+        for module, name, _, line in _imports(path):
             seen += 1
             if not _resolves(module, name):
                 missing.append(
@@ -57,3 +62,62 @@ def test_script_imports_resolve():
                 )
     assert seen > 100, f"only {seen} imports found — is the walk broken?"
     assert not missing, "unresolved imports:\n" + "\n".join(missing)
+
+
+def _library_bindings(path):
+    """Local name -> resolved object, for every ``indra_db_spark`` import
+    in the script."""
+    bound = {}
+    for module, name, local, _ in _imports(path):
+        if module.split(".")[0] != "indra_db_spark":
+            continue
+        obj = importlib.import_module(module)
+        if name is not None:
+            obj = getattr(obj, name, None) or importlib.import_module(
+                f"{module}.{name}"
+            )
+        elif local == module.split(".")[0]:  # ``import a.b`` binds ``a``
+            obj = importlib.import_module(local)
+        bound[local] = obj
+    return bound
+
+
+def _callee(func, bound):
+    """The library object a call's ``func`` expression names, or None."""
+    chain = []
+    while isinstance(func, ast.Attribute):
+        chain.append(func.attr)
+        func = func.value
+    if not isinstance(func, ast.Name) or func.id not in bound:
+        return None
+    obj = bound[func.id]
+    for attr in reversed(chain):
+        obj = getattr(obj, attr, None)
+    module = getattr(obj, "__module__", None) or ""
+    return obj if callable(obj) and module.startswith("indra_db_spark") else None
+
+
+def test_script_keywords_are_parameters():
+    seen, bad = 0, []
+    for path in SCRIPTS:
+        bound = _library_bindings(path)
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = _callee(node.func, bound)
+            if fn is None:
+                continue
+            params = inspect.signature(fn).parameters
+            if any(p.kind is p.VAR_KEYWORD for p in params.values()):
+                continue
+            for kw in node.keywords:
+                if kw.arg is None:  # **mapping: not checkable statically
+                    continue
+                seen += 1
+                if kw.arg not in params:
+                    bad.append(
+                        f"{path.relative_to(ROOT)}:{node.lineno}: "
+                        f"{fn.__qualname__}({kw.arg}=)"
+                    )
+    assert seen > 50, f"only {seen} keywords found — is the walk broken?"
+    assert not bad, "keywords that are not parameters:\n" + "\n".join(bad)
