@@ -151,12 +151,7 @@ def _parse_after(v: Any) -> tuple:
     return (sort_v, int(parts[1]))
 
 
-def load_context(
-    spark,
-    out_dir: str,
-    bucketed: bool = False,
-    buckets: int = 16,
-) -> QueryContext:
+def load_context(spark, out_dir: str, bucketed: bool = False) -> QueryContext:
     """Pipeline output dir → serving ``QueryContext``.
 
     ``bucketed=True`` re-registers pa_statements and evidence as
@@ -193,12 +188,8 @@ def load_context(
         h8 = hashlib.md5(os.path.abspath(out_dir).encode()).hexdigest()[:8]
         pa_name = f"pa_statements_srv_{h8}"
         ev_name = f"evidence_srv_{h8}"
-        storage.write_bucketed_table(
-            pa, pa_name, buckets, "mk_hash", path=f"{out_dir}/_srv/pa"
-        )
-        storage.write_bucketed_table(
-            ev, ev_name, buckets, "mk_hash", path=f"{out_dir}/_srv/ev"
-        )
+        storage.write_bucketed_table(pa, pa_name, path=f"{out_dir}/_srv/pa")
+        storage.write_bucketed_table(ev, ev_name, path=f"{out_dir}/_srv/ev")
         pa = spark.table(pa_name)
         ev = spark.table(ev_name)
     return QueryContext(pa_statements=pa, evidence=ev)

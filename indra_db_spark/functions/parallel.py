@@ -81,14 +81,13 @@ def _plan_has_shuffle(df: DataFrame) -> bool:
     return False
 
 
-def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
-    """Ensure a narrow-over-scan ``df`` has at least ``min_partitions``
-    partitions (default: the session's ``defaultParallelism``),
-    repartitioning only when it has fewer. Row content and downstream
-    results are unchanged — only the physical parallelism of the stage
-    that consumes ``df``.
+def fan_out(df: DataFrame) -> DataFrame:
+    """Ensure a narrow-over-scan ``df`` has at least the session's
+    ``defaultParallelism`` partitions, repartitioning only when it has
+    fewer. Row content and downstream results are unchanged — only the
+    physical parallelism of the stage that consumes ``df``.
     """
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if target <= 1 or _plan_has_shuffle(df):
         return df
     try:

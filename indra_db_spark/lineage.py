@@ -97,12 +97,9 @@ class LineageLog:
         # a crash mid-write must leave old-or-nothing, not torn JSON).
         _write_json_atomic(self._stage_path(stage), rec)
 
-    def completed_partitions(
-        self, stage: str, input_fingerprint: str | None = None
-    ) -> set[str]:
-        """Partitions committed for this stage. With ``input_fingerprint``,
-        only partitions written under that exact fingerprint count — a
-        partial resume must never trust partitions from a run with
+    def completed_partitions(self, stage: str, input_fingerprint: str) -> set[str]:
+        """Partitions committed for this stage under ``input_fingerprint``
+        — a partial resume must never trust partitions from a run with
         different inputs/params."""
         d = self._stage_dir(stage)
         if not os.path.isdir(d):
@@ -115,10 +112,7 @@ class LineageLog:
                         rec = json.load(f)
                 except json.JSONDecodeError:
                     continue  # torn write = that partition not committed
-                if (
-                    input_fingerprint is not None
-                    and rec.get("input_fingerprint") != input_fingerprint
-                ):
+                if rec.get("input_fingerprint") != input_fingerprint:
                     continue
                 out.add(str(rec["partition"]))
         return out

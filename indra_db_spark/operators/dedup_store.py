@@ -99,6 +99,9 @@ _MANIFEST = "_dedup_store.json"
 _PARAM_KEYS = ("k", "num_hashes", "bands", "hash_fn", "threshold")
 # chars Spark never Hive-escapes in partition dir names (see _check_batch_id)
 _BATCH_ID_RE = re.compile(r"[A-Za-z0-9][A-Za-z0-9._-]*")
+# the table layouts of the module docstring
+_BY_BATCH = storage.Layout("batch_id")
+_CLUSTERS = storage.Layout("_b")
 
 
 class DedupStore:
@@ -285,7 +288,7 @@ class DedupStore:
             storage.write_table(
                 df.withColumn("batch_id", F.lit(batch_id)),
                 self._path(table),
-                ["batch_id"],
+                _BY_BATCH,
                 mode="overwrite_partitions",
             )
 
@@ -410,7 +413,7 @@ class DedupStore:
         self._write_batch_tables(batch_id, b, idx.doc_fps, idx.fp_buckets)
         clustered = clusters.withColumn("_b", F.lit(batch_id))
         storage.write_table(
-            clustered, self._path("clusters"), ["_b"], mode="overwrite"
+            clustered, self._path("clusters"), _CLUSTERS, mode="overwrite"
         )
         self._commit(batch_id)
         return {
@@ -465,7 +468,7 @@ class DedupStore:
             )
             self._backup_partitions(batch_id, affected)
             storage.scoped_overwrite(
-                content, self._path("clusters"), "_b", affected
+                content, self._path("clusters"), _CLUSTERS, affected
             )
         self._commit(batch_id)
         shutil.rmtree(self._staging(batch_id), ignore_errors=True)
@@ -553,7 +556,7 @@ class DedupStore:
             .withColumn("_b", F.lit(compacted_id))
             .localCheckpoint(),
             self._path("clusters"),
-            ["_b"],
+            _CLUSTERS,
             mode="overwrite_partitions",
         )
         self._swap_ledger([compacted_id])

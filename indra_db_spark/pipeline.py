@@ -16,7 +16,8 @@ Scale notes: the only wide operations are the dedup groupBys (salted,
 §8.6), the refinement self-join (AQE skew-split), and the CC iterations.
 raw_statements/evidence are day-partitioned (days(warc_ts) — Iceberg-style
 identity partition on the crawl date); pa tables are bucketed by
-pmod(mk_hash, B) so downstream hash-keyed joins co-locate.
+pmod(mk_hash, B) so downstream hash-keyed joins co-locate. Each table's
+layout (partition column and in-file sort) is ``storage.LAYOUT``'s.
 """
 
 from __future__ import annotations
@@ -38,19 +39,12 @@ from indra_db_spark.operators import refine as refine_op
 from indra_db_spark.sources import dims as dims_mod
 from indra_db_spark.sources import storage
 
-PA_BUCKETS = 16
-
 
 @dataclass
 class PipelineResult:
     tables: dict[str, DataFrame] = field(default_factory=dict)
     metrics: dict[str, dict] = field(default_factory=dict)
     skipped: list[str] = field(default_factory=list)
-
-
-def bucket(col):
-    """The bucket-partition value of a hash column (pa tables, pa_link)."""
-    return F.pmod(col, F.lit(PA_BUCKETS))
 
 
 def run_pipeline(
@@ -93,12 +87,13 @@ def run_pipeline(
     def path(table: str) -> str:
         return f"{out_dir}/{table}"
 
-    def run_stage(stage, fp, builder, table_specs):
-        """table_specs: (table_name, result_key, partition_cols[, sort_cols
-        [, write_opts_dict]])."""
+    def run_stage(stage, fp, builder, tables, clustered=()):
+        """``builder()`` returns a frame per table name in ``tables``,
+        written in its ``storage.LAYOUT`` (unpartitioned if it has none);
+        ``clustered`` names the tables whose frame is ``input_clustered``."""
         if resume and log.completed(stage, fp):
             res.skipped.append(stage)
-            for tbl, *_ in table_specs:
+            for tbl in tables:
                 res.tables[tbl] = storage.read_table(spark, path(tbl))
             res.metrics[stage] = {**(log.read(stage) or {}), "resumed": True}
             return
@@ -106,12 +101,11 @@ def run_pipeline(
         outputs = builder()
         rows_total = 0
         extra = {}
-        for tbl, key, part_cols, *rest in table_specs:
+        for tbl in tables:
             m = storage.write_table(
-                outputs[key], path(tbl), part_cols,
+                outputs[tbl], path(tbl), storage.LAYOUT.get(tbl),
                 compute_signature=signatures,
-                sort_by=rest[0] if rest else None,
-                **(rest[1] if len(rest) > 1 else {}),
+                input_clustered=tbl in clustered,
             )
             rows_total += m.get("row_count", 0)
             extra[f"{tbl}_rows"] = m.get("row_count")
@@ -169,19 +163,16 @@ def run_pipeline(
         extracted = extract_op.extract_statements(work, extractor_version)
         raw = ground_op.ground_statements(
             extracted, grounding_map, source_expr=source_expr
-        ).withColumn("day", storage.day("warc_ts"))
+        )
         # Partial resume uses DYNAMIC PARTITION OVERWRITE, not append: a
         # crash can leave a day with data but no part manifest (mid-write)
         # or with BOTH data and a part manifest but no stage commit
         # (mid-commit) — re-writing the not-done days must replace
         # whatever is there, never stack on top of it.
         mode = "overwrite_partitions" if partial_ok else "overwrite"
-        # url-sorted within files: parquet row-group min/max stats on url
-        # become selective, so the supplement's filter-pushed evidence
-        # gather (streaming/supplement.py step 4) skips the row groups of
-        # untouched urls instead of decoding the whole fat log
         storage.write_table(
-            raw, path("raw_statements"), ["day"], mode=mode, sort_by=["url"]
+            raw, path("raw_statements"), storage.LAYOUT["raw_statements"],
+            mode=mode,
         )
         back = storage.read_table(spark, path("raw_statements"))
         pc = {
@@ -205,26 +196,21 @@ def run_pipeline(
         # skipping it removes a full shuffle of the widest table. pa and
         # evidence each read the raw parquet independently with column
         # pruning (cheaper than materializing a shared checkpoint).
-        pa = dedup_op.build_pa_statements(raw).withColumn("bucket", bucket("mk_hash"))
-        ev = dedup_op.build_evidence(raw)
-        return {"pa": pa, "ev": ev}
+        return {
+            "pa_statements_base": dedup_op.build_pa_statements(raw),
+            "evidence": dedup_op.build_evidence(raw),
+        }
 
+    # evidence is day-partitioned (SURVEY §8.1 days(warc_ts)): time-scoped
+    # serving reads prune whole crawl days, and the incremental supplement
+    # rewrites only affected partitions instead of the whole table. Its
+    # input is clustered: evidence is a 1:1 projection of raw_statements
+    # READ BACK from its day-partitioned files, so rows already arrive
+    # day-grouped — the anti-small-file repartition would be a redundant
+    # full shuffle of the widest table in the pipeline.
     run_stage(
-        "pa_base",
-        fp_pa,
-        build_pa,
-        [
-            ("pa_statements_base", "pa", ["bucket"], ["mk_hash"]),
-            # evidence is day-partitioned (SURVEY §8.1 days(warc_ts)):
-            # time-scoped serving reads prune whole crawl days, and the
-            # incremental supplement rewrites only affected partitions
-            # instead of the whole table. input_clustered: evidence is a
-            # 1:1 projection of raw_statements READ BACK from its
-            # day-partitioned files, so rows already arrive day-grouped —
-            # the anti-small-file repartition would be a redundant full
-            # shuffle of the widest table in the pipeline.
-            ("evidence", "ev", ["day"], ["mk_hash"], {"input_clustered": True}),
-        ],
+        "pa_base", fp_pa, build_pa, ["pa_statements_base", "evidence"],
+        clustered={"evidence"},
     )
     pa_base = res.tables["pa_statements_base"]
 
@@ -235,12 +221,8 @@ def run_pipeline(
     run_stage(
         "pa_link",
         fp_link,
-        lambda: {
-            "link": refine_op.build_pa_link(pa_base, isa_closure).withColumn(
-                "bucket", bucket("supported_mk_hash")
-            )
-        },
-        [("pa_link", "link", ["bucket"])],
+        lambda: {"pa_link": refine_op.build_pa_link(pa_base, isa_closure)},
+        ["pa_link"],
     )
     pa_link = res.tables["pa_link"]
 
@@ -254,26 +236,17 @@ def run_pipeline(
     run_stage(
         "components",
         fp_cc,
-        lambda: {
-            "cc": cc_op.assign_components(pa_base, pa_link).withColumn(
-                "bucket", bucket("mk_hash")
-            )
-        },
-        [("pa_groups", "cc", ["bucket"])],
+        lambda: {"pa_groups": cc_op.assign_components(pa_base, pa_link)},
+        ["pa_groups"],
     )
 
     # ---- stage 5: belief → final pa_statements
     fp_belief = fingerprint("belief", fp_link, priors_sig, "v1")
-
-    def build_final():
-        final = belief_op.with_belief(pa_base, pa_link, priors).withColumn(
-            "bucket", bucket("mk_hash")
-        )
-        return {"final": final}
-
     run_stage(
-        "belief", fp_belief, build_final,
-        [("pa_statements", "final", ["bucket"], ["mk_hash"])]
+        "belief",
+        fp_belief,
+        lambda: {"pa_statements": belief_op.with_belief(pa_base, pa_link, priors)},
+        ["pa_statements"],
     )
     pa_final = res.tables["pa_statements"]
 
@@ -287,10 +260,6 @@ def run_pipeline(
             "source_meta": meta_op.build_source_meta(pa_final),
             "agent_interactions": meta_op.build_agent_interactions(pa_final),
         },
-        [
-            ("name_meta", "name_meta", None),
-            ("source_meta", "source_meta", None),
-            ("agent_interactions", "agent_interactions", None),
-        ],
+        ["name_meta", "source_meta", "agent_interactions"],
     )
     return res

@@ -21,24 +21,22 @@ from pyspark.sql.pandas.types import to_arrow_schema
 def get_spark(
     app_name: str = "indra_db_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``).
-    ``shuffle_partitions`` defaults to 2× the local parallelism — on a real
-    cluster this would be sized to executor-cores × executors (and AQE
-    coalesces down at runtime anyway).
+    Shuffle partitions are 2× the local parallelism — on a real cluster
+    this would be sized to executor-cores × executors (and AQE coalesces
+    down at runtime anyway); ``extra_conf`` overrides any conf set here.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
-    if shuffle_partitions is None:
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "*"
-        # local[N,maxFailures] is a legal master URL — only N sizes shuffles
-        n = n.split(",")[0].strip()
-        shuffle_partitions = 64 if not n.isdigit() else max(8, 2 * int(n))
+    n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "*"
+    # local[N,maxFailures] is a legal master URL — only N sizes shuffles
+    n = n.split(",")[0].strip()
+    shuffle_partitions = 64 if not n.isdigit() else max(8, 2 * int(n))
 
     builder = (
         SparkSession.builder.master(master)

@@ -25,6 +25,14 @@ write itself), and only a full overwrite may re-read the table:
 Appends and partition-scoped writes therefore always commit in
 O(batch): an incremental caller (the supplement, the dedup store) never
 re-hashes or recounts a corpus to commit a batch.
+
+The layout rule: a partitioned table's ``Layout`` — its partition
+column, the column that column's value is computed from, and the in-file
+sort — is the table's metadata (Iceberg's partition spec and write sort
+order), and every writer follows it. ``LAYOUT`` declares it once per
+corpus table; ``write_table`` computes the partition column from the
+layout and sorts each file as it says, so the build and every
+incremental rewrite of a table lay out their files the same way.
 """
 
 from __future__ import annotations
@@ -32,6 +40,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,6 +48,13 @@ from pyspark.sql import functions as F
 # Files per partition value of a partitioned write (the within-partition
 # splitter below)
 FILES_PER_PARTITION = 8
+
+# Hash buckets of the pa tables, pa_link and pa_groups (``bucket``)
+PA_BUCKETS = 16
+
+# Buckets (and files) per table of the serving publish
+# (``write_bucketed_table``)
+SERVING_BUCKETS = 16
 
 
 def day(col):
@@ -55,6 +71,51 @@ def day(col):
     partial resume would drop undated pages. Nor can NULL be sorted next
     to the dated values, which the supplement does with a batch's days."""
     return F.coalesce(F.date_format(col, "yyyy-MM-dd"), F.lit("undated"))
+
+
+def bucket(col):
+    """The bucket-partition value of a hash column (pa tables, pa_link,
+    pa_groups)."""
+    return F.pmod(col, F.lit(PA_BUCKETS))
+
+
+class Layout(NamedTuple):
+    """How a partitioned table lies on disk. ``part_col`` is the
+    partition column: ``day`` or ``bucket`` of the ``source`` column, or
+    a column every writer's frame already carries (``source`` None).
+    ``sort_by`` is the in-file sort — parquet min/max stats then prune
+    row groups for lookups on those columns (the shim's stand-in for an
+    Iceberg write sort order)."""
+
+    part_col: str
+    source: str | None = None
+    sort_by: tuple[str, ...] = ()
+
+
+# The six partitioned corpus tables. raw_statements is url-sorted so the
+# supplement's filter-pushed evidence gather skips untouched urls' row
+# groups; evidence and the pa tables are mk_hash-sorted for hash lookups.
+# evidence's producer (``dedup.build_evidence``) already emits ``day``.
+LAYOUT = {
+    "raw_statements": Layout("day", "warc_ts", ("url",)),
+    "evidence": Layout("day", None, ("mk_hash",)),
+    "pa_statements_base": Layout("bucket", "mk_hash", ("mk_hash",)),
+    "pa_statements": Layout("bucket", "mk_hash", ("mk_hash",)),
+    "pa_link": Layout("bucket", "supported_mk_hash"),
+    "pa_groups": Layout("bucket", "mk_hash"),
+}
+
+_TRANSFORMS = {"day": day, "bucket": bucket}
+
+
+def with_partition(df: DataFrame, layout: Layout) -> DataFrame:
+    """``df`` with ``layout``'s partition column computed from its
+    source column."""
+    if layout.source is None:
+        return df
+    return df.withColumn(
+        layout.part_col, _TRANSFORMS[layout.part_col](layout.source)
+    )
 
 
 def _hashable(df: DataFrame) -> list:
@@ -96,36 +157,38 @@ def _content_signature(df: DataFrame) -> tuple[int, int]:
 def write_table(
     df: DataFrame,
     path: str,
-    partition_by: list[str] | None = None,
+    layout: Layout | None = None,
     mode: str = "overwrite",
     compute_signature: bool = False,
-    sort_by: list[str] | None = None,
     input_clustered: bool = False,
 ) -> dict:
     """Write a table + manifest; returns the manifest dict. What the
-    manifest records per ``mode`` is the module docstring's commit rule.
-
-    ``sort_by``: sortWithinPartitions before writing — parquet min/max
-    column stats then prune row groups for point lookups on those columns
-    (the shim's stand-in for Iceberg sorted writes / Z-order; the
-    reference builds btree indexes instead — schemas/indexes.py).
+    manifest records per ``mode`` is the module docstring's commit rule;
+    how the files lie is ``layout``'s (the layout rule), or one
+    unpartitioned, unsorted table without one. Sorted files are the
+    shim's stand-in for Iceberg sorted writes / Z-order; the reference
+    builds btree indexes instead (schemas/indexes.py).
 
     ``input_clustered``: the incoming partitioning already groups rows by
-    ``partition_by`` (e.g. the frame derives 1:1 from a table read back
-    from disk with the same partition layout) — skip the anti-small-file
-    repartition, saving a full shuffle of the table. Each task then
-    writes files only for the few partition values it actually holds.
+    the partition column (e.g. the frame derives 1:1 from a table read
+    back from disk with the same partition layout) — skip the
+    anti-small-file repartition, saving a full shuffle of the table. Each
+    task then writes files only for the few partition values it actually
+    holds.
     """
     from pyspark.sql import Observation
 
     if mode not in ("overwrite", "append", "overwrite_partitions"):
         raise ValueError(f"unknown write mode {mode!r}")
-    if mode == "overwrite_partitions" and not partition_by:
-        raise ValueError("overwrite_partitions requires partition_by")
+    if mode == "overwrite_partitions" and layout is None:
+        raise ValueError("overwrite_partitions requires a layout")
     if compute_signature and mode != "overwrite":
         raise ValueError(
             f"compute_signature requires mode='overwrite', not {mode!r}"
         )
+    partition_by = [layout.part_col] if layout else []
+    if layout:
+        df = with_partition(df, layout)
     if partition_by and not input_clustered:
         # Cluster rows by partition value before a partitioned write:
         # otherwise every task emits one file per partition value
@@ -139,8 +202,8 @@ def write_table(
         split_cols = _hashable(df.drop(*partition_by))[:4] or [F.lit(1)]
         split = F.pmod(F.xxhash64(*split_cols), F.lit(FILES_PER_PARTITION))
         df = df.repartition(*partition_by, split)
-    if sort_by:
-        df = df.sortWithinPartitions(*sort_by)
+    if layout and layout.sort_by:
+        df = df.sortWithinPartitions(*layout.sort_by)
     obs = Observation()
     observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
     writer = observed.write.mode("overwrite" if mode != "append" else "append")
@@ -165,7 +228,7 @@ def write_table(
     manifest = {
         "format": "parquet-shim-v1",
         "schema": df.schema.jsonValue(),
-        "partition_by": partition_by or [],
+        "partition_by": partition_by,
         "committed_at_unix": int(time.time()),
         "rows_written": rows_written,
     }
@@ -190,14 +253,9 @@ def write_table(
 
 
 def write_bucketed_table(
-    df: DataFrame,
-    table: str,
-    buckets: int = 16,
-    bucket_col: str = "mk_hash",
-    sort_col: str | None = "mk_hash",
-    path: str | None = None,
+    df: DataFrame, table: str, path: str | None = None
 ) -> None:
-    """Materialize a catalog table bucketed on ``bucket_col`` —
+    """Materialize a catalog table bucketed and sorted on ``mk_hash`` —
     the Iceberg ``bucket(N, mk_hash)`` partition-transform analog this
     sandbox can actually execute (no Iceberg jar; Spark's native bucketing
     carries the same co-location contract through the session catalog).
@@ -210,29 +268,29 @@ def write_bucketed_table(
 
     One file per bucket: Spark's bucket id is ``pmod(murmur3(col), N)``,
     the same expression ``repartition(N, col)`` partitions on, so each
-    write task holds exactly one bucket and a lookup on ``bucket_col``
+    write task holds exactly one bucket and a lookup on ``mk_hash``
     opens one file per selected bucket (without the repartition every
     task writes a file for every bucket it sees: tasks × N files). The
     bucket count is therefore also the write's parallelism.
     """
     w = (
-        df.repartition(buckets, bucket_col)
+        df.repartition(SERVING_BUCKETS, "mk_hash")
         .write.format("parquet")
         .mode("overwrite")
-        .bucketBy(buckets, bucket_col)
+        .bucketBy(SERVING_BUCKETS, "mk_hash")
+        .sortBy("mk_hash")
     )
-    if sort_col:
-        w = w.sortBy(sort_col)
     if path:
         w = w.option("path", path)
     w.saveAsTable(table)
 
 
 def scoped_overwrite(
-    df: DataFrame, table_path: str, part_col: str, scope_values: list
+    df: DataFrame, table_path: str, layout: Layout, scope_values: list
 ) -> None:
-    """Replace the ``scope_values`` partitions of ``table_path`` with
-    ``df``'s rows in them, as an O(batch) ``overwrite_partitions`` commit.
+    """Replace the ``scope_values`` partitions of ``table_path`` (laid
+    out as ``layout``) with ``df``'s rows in them, as an O(batch)
+    ``overwrite_partitions`` commit.
 
     Rows of ``df`` outside the scope are dropped: dynamic overwrite would
     otherwise replace each such row's whole partition with just that
@@ -244,12 +302,13 @@ def scoped_overwrite(
     write deletes."""
     import shutil
 
-    df = df.where(F.col(part_col).isin(list(scope_values)))
+    part_col = layout.part_col
+    df = with_partition(df, layout).where(F.col(part_col).isin(list(scope_values)))
     surviving = {r[part_col] for r in df.select(part_col).distinct().collect()}
     for v in scope_values:
         if v not in surviving:
             shutil.rmtree(f"{table_path}/{part_col}={v}", ignore_errors=True)
-    write_table(df, table_path, [part_col], mode="overwrite_partitions")
+    write_table(df, table_path, layout, mode="overwrite_partitions")
 
 
 def append_lazy(df: DataFrame, path: str, key_cols: list[str]) -> dict:

@@ -21,8 +21,14 @@ Structured Streaming wrapper in :mod:`indra_db_spark.streaming.stream`):
      small-side joins against the full corpus, not a full self-join,
   6. belief recomputed for affected ∪ statements supported by affected
      (one-hop evidence inheritance),
-  7. append-only evidence, full-partition overwrite for pa tables —
-     idempotent under retry.
+  7. partition-scoped rewrites of evidence and the pa tables, then the
+     raw append as the commit point — idempotent under retry.
+
+A supplement maintains the five tables in ``TABLES``: raw_statements,
+evidence, pa_statements, pa_link and pa_groups, each written in its
+``storage.LAYOUT``. pa_statements_base, name_meta, source_meta and
+agent_interactions are build-only: a supplement does not refresh them,
+and nothing in the library or the server reads them.
 
 Every output equals the full rebuild on (old ∪ new) pages — property-
 tested in tests/test_supplement.py.
@@ -48,8 +54,9 @@ from indra_db_spark.operators.components import (
 )
 from indra_db_spark.sources import dims as dims_mod
 from indra_db_spark.sources import storage
-from indra_db_spark.pipeline import bucket
 
+# The tables a supplement maintains (module docstring)
+TABLES = ("raw_statements", "evidence", "pa_statements", "pa_link", "pa_groups")
 
 # Per-source cap on the url sets the evidence gather collects so it can
 # run as a pruned, filter-pushed read of the raw log — batch urls and
@@ -60,16 +67,24 @@ from indra_db_spark.pipeline import bucket
 GATHER_ISIN_MAX = 20_000
 
 
-def _partitioned_by(table_path: str, part_col: str) -> bool:
-    m = storage.read_manifest(table_path)
-    return bool(m) and m.get("partition_by") == [part_col]
+def _partitions(df: DataFrame, table: str) -> list:
+    """The partitions of ``table`` that ``df``'s rows fall in."""
+    layout = storage.LAYOUT[table]
+    return [
+        r[0]
+        for r in storage.with_partition(df, layout)
+        .select(layout.part_col)
+        .distinct()
+        .collect()
+    ]
 
 
 def _require_current_layout(spark: SparkSession, out_dir: str) -> None:
     """Fail fast on corpora built before the current (r3) schema.
 
     A pre-r3 corpus lacks the ``bounds`` agent-struct field, the evidence
-    ``day`` partitioning, and the pa bucket partitioning; supplementing
+    ``day`` partitioning, and the pa bucket partitioning (any table of
+    ``TABLES`` not partitioned as its ``storage.LAYOUT``); supplementing
     one would die mid-merge with an opaque AnalysisException (or worse,
     rewrite the wrong partitions). Schema-aligning on read is not sound
     either: the r3 BoundCondition grammar changes matches-keys, so the
@@ -88,13 +103,10 @@ def _require_current_layout(spark: SparkSession, out_dir: str) -> None:
             problems.append(
                 "raw_statements.subj lacks the 'bounds' condition field"
             )
-    for table, col in (
-        ("evidence", "day"),
-        ("pa_statements", "bucket"),
-        ("pa_link", "bucket"),
-        ("pa_groups", "bucket"),  # r5: incremental-CC bucket scoping
-    ):
-        if not _partitioned_by(f"{out_dir}/{table}", col):
+    for table in TABLES:
+        col = storage.LAYOUT[table].part_col
+        m = storage.read_manifest(f"{out_dir}/{table}")
+        if not m or m.get("partition_by") != [col]:
             problems.append(f"{table} is not partitioned by '{col}'")
     if problems:
         raise ValueError(
@@ -328,7 +340,6 @@ def supplement_corpus(
         merged_pa_base.join(beliefs, "mk_hash", "left")
         .withColumn("belief", F.coalesce("belief", F.lit(0.0)))
         .select(*schemas.PA_STATEMENTS.names)
-        .withColumn("bucket", bucket("mk_hash"))
         # materialize BEFORE the overwrite below — the plan reads the very
         # pa_statements files the write deletes (read-overwrite-same-path)
         .localCheckpoint()
@@ -369,7 +380,8 @@ def supplement_corpus(
         .localCheckpoint()  # plan reads the files the write replaces
     )
     storage.scoped_overwrite(
-        merged_evidence, path("evidence"), "day", aff_day_list
+        merged_evidence, path("evidence"), storage.LAYOUT["evidence"],
+        aff_day_list,
     )
 
     # pa_statements: bucket-scoped rewrite. A pa row changes only when
@@ -378,12 +390,9 @@ def supplement_corpus(
     # untouched bucket directories keep their files byte-for-byte, same
     # contract as the evidence days above. (Non-bucketed corpora are
     # rejected up front by _require_current_layout.)
-    dirty_buckets = [
-        r["b"]
-        for r in dirty.select(bucket("mk_hash").alias("b")).distinct().collect()
-    ]
     storage.scoped_overwrite(
-        merged_final, path("pa_statements"), "bucket", dirty_buckets
+        merged_final, path("pa_statements"), storage.LAYOUT["pa_statements"],
+        _partitions(dirty, "pa_statements"),
     )
 
     # pa_link: bucket-scoped on pmod(supported_mk_hash) — the changed
@@ -405,36 +414,26 @@ def supplement_corpus(
     # (exactly the pre-r5 per-batch behavior — paid only on crash
     # recovery), which is correct against ANY mixed pa_link/pa_groups
     # disk state because it reads only the recomputed in-memory
-    # merged_link_b.
+    # merged edge set.
     inflight_marker = f"{out_dir}/_supplement_inflight.json"
     groups_need_full_cc = os.path.exists(inflight_marker)
     link_cols = ["supported_mk_hash", "supporting_mk_hash"]
-    merged_link_b = merged_link.select(*link_cols).withColumn(
-        "bucket", bucket("supported_mk_hash")
-    ).localCheckpoint()
+    # merged_link is a local checkpoint already, so this projection never
+    # reads the pa_link files the write below replaces
+    edges = merged_link.select(*link_cols)
     # removed/added are consumed again AFTER pa_link is overwritten below
     # (the pa_groups touched-set union) — materialize them now, while the
     # old pa_link files they read still exist. Both are small by
     # construction (the batch's changed edge set).
-    removed = old_link.join(
-        merged_link.select(*link_cols), link_cols, "left_anti"
-    ).localCheckpoint()
-    added = merged_link.select(*link_cols).join(
-        old_link, link_cols, "left_anti"
-    ).localCheckpoint()
-    link_buckets = [
-        r["b"]
-        for r in removed.unionByName(added)
-        .select(bucket("supported_mk_hash").alias("b"))
-        .distinct()
-        .collect()
-    ]
+    removed = old_link.join(edges, link_cols, "left_anti").localCheckpoint()
+    added = edges.join(old_link, link_cols, "left_anti").localCheckpoint()
+    link_buckets = _partitions(removed.unionByName(added), "pa_link")
     storage._write_json_atomic(
         inflight_marker,
         {"stage": "pa_link+pa_groups", "batch_days": sorted(batch_days)},
     )
     storage.scoped_overwrite(
-        merged_link_b, path("pa_link"), "bucket", link_buckets
+        edges, path("pa_link"), storage.LAYOUT["pa_link"], link_buckets
     )
 
     # pa_groups: INCREMENTAL connected components (VERDICT r4 #2 — this
@@ -468,12 +467,11 @@ def supplement_corpus(
         # on-disk pa_link/pa_groups may be any per-partition mix of pre-
         # and post-batch state, so the diff-seeded incremental path below
         # is unsound — recompute the labels from scratch off the
-        # deterministic in-memory merge (self-healing, full overwrite)
-        groups_full = (
-            assign_components(merged_final, merged_link_b.select(*link_cols))
-            .withColumn("bucket", bucket("mk_hash"))
-            .localCheckpoint()  # plan reads the pa_link/pa_groups files
-        )
+        # deterministic in-memory merge (self-healing, full overwrite).
+        # Its inputs are checkpoints; it is materialized because the
+        # bucket collect and the write both consume it, so the CC
+        # iterations run once.
+        groups_full = assign_components(merged_final, edges).localCheckpoint()
         # scoped overwrite across (disk ∪ frame) buckets, NOT a static
         # mode="overwrite": static overwrite deletes the whole directory
         # — manifest included — before the job commits, so a crash DURING
@@ -487,14 +485,11 @@ def supplement_corpus(
             for name in os.listdir(f"{out_dir}/pa_groups")
             if name.startswith("bucket=")
         }
-        frame_buckets = {
-            r["bucket"] for r in groups_full.select("bucket").distinct().collect()
-        }
         storage.scoped_overwrite(
             groups_full,
             path("pa_groups"),
-            "bucket",
-            sorted(disk_buckets | frame_buckets),
+            storage.LAYOUT["pa_groups"],
+            sorted(disk_buckets | set(_partitions(groups_full, "pa_groups"))),
         )
         return _finish_supplement(spark, path, inflight_marker, new_raw)
 
@@ -520,7 +515,7 @@ def supplement_corpus(
         .distinct()
         .localCheckpoint()
     )
-    sub_edges = merged_link_b.select(*link_cols).join(
+    sub_edges = edges.join(
         region.withColumnRenamed("mk_hash", "supported_mk_hash"),
         "supported_mk_hash",
         "left_semi",
@@ -535,10 +530,7 @@ def supplement_corpus(
             F.coalesce("component_id", "mk_hash").alias("component_id"),
         )
     )
-    group_buckets = [
-        r["b"]
-        for r in region.select(bucket("mk_hash").alias("b")).distinct().collect()
-    ]
+    group_buckets = _partitions(region, "pa_groups")
     if group_buckets:
         # kept rows are only ever REWRITTEN inside group_buckets, so the
         # kept-side read is partition-pruned to those buckets (static
@@ -563,12 +555,12 @@ def supplement_corpus(
             # is partition-pruned to them and region_labels ⊆ region,
             # whose pmod defined group_buckets)
             .select("mk_hash", "component_id")
-            .withColumn("bucket", bucket("mk_hash"))
             # plan reads the very pa_groups files the write replaces
             .localCheckpoint()
         )
         storage.scoped_overwrite(
-            scoped_groups, path("pa_groups"), "bucket", group_buckets
+            scoped_groups, path("pa_groups"), storage.LAYOUT["pa_groups"],
+            group_buckets,
         )
     return _finish_supplement(spark, path, inflight_marker, new_raw)
 
@@ -587,17 +579,7 @@ def _finish_supplement(spark, path, inflight_marker: str, new_raw: DataFrame):
     # re-derives everything (deterministically); appending raw first would
     # make that same retry a silent no-op with stale derived tables.
     storage.write_table(
-        new_raw.withColumn("day", storage.day("warc_ts")),
-        path("raw_statements"),
-        ["day"],
+        new_raw, path("raw_statements"), storage.LAYOUT["raw_statements"],
         mode="append",
-        sort_by=["url"],  # keep appended files row-group-skippable too
     )
-
-    return {
-        "pa_statements": storage.read_table(spark, path("pa_statements")),
-        "pa_link": storage.read_table(spark, path("pa_link")),
-        "evidence": storage.read_table(spark, path("evidence")),
-        "raw_statements": storage.read_table(spark, path("raw_statements")),
-        "pa_groups": storage.read_table(spark, path("pa_groups")),
-    }
+    return {t: storage.read_table(spark, path(t)) for t in TABLES}

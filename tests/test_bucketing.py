@@ -38,8 +38,8 @@ def warehouse(spark):
     )
     pa = build_pa_statements(raw).withColumn("belief", F.lit(0.0))
     ev = build_evidence(raw)
-    write_bucketed_table(pa, "pa_bucketed", 16, "mk_hash", path=f"{base}/pa")
-    write_bucketed_table(ev, "ev_bucketed", 16, "mk_hash", path=f"{base}/ev")
+    write_bucketed_table(pa, "pa_bucketed", path=f"{base}/pa")
+    write_bucketed_table(ev, "ev_bucketed", path=f"{base}/ev")
     yield base
     for t in ("pa_bucketed", "ev_bucketed"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")

@@ -27,14 +27,14 @@ def test_fan_out_ignores_column_names(spark):
     # a column literally named "Join" used to read as a join node in the
     # plan text and silently skip the floor
     df = spark.range(16, numPartitions=1).withColumnRenamed("id", "Join")
-    out = fan_out(df, 4)
-    assert out.rdd.getNumPartitions() == 4
+    out = fan_out(df)
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism > 1
     assert sorted(r["Join"] for r in out.collect()) == list(range(16))
 
 
 def test_fan_out_leaves_shuffled_plans_alone(spark):
     g = spark.range(16, numPartitions=1).groupBy((F.col("id") % 2).alias("k")).count()
-    assert fan_out(g, 4) is g
+    assert fan_out(g) is g
 
 
 def test_sort_barrier_hash_exchange_below_range_exchange(spark):
@@ -51,7 +51,7 @@ def test_sort_barrier_hash_exchange_below_range_exchange(spark):
 
 
 def test_pin_keeps_derived_filter_above_fan_out_exchange(spark):
-    derived = fan_out(spark.range(64, numPartitions=1), 4).select(
+    derived = fan_out(spark.range(64, numPartitions=1)).select(
         "id", (F.col("id") * 3 % 5).alias("d")
     )
     cond = F.col("d") == 1

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from indra_db_spark.sources.storage import (
+    Layout,
     read_manifest,
     read_table,
     scoped_overwrite,
@@ -32,11 +33,11 @@ def test_scoped_overwrite_drops_rows_outside_scope(spark, tmp_path):
     base = spark.createDataFrame(
         [(p, v) for p in ("a", "b") for v in range(3)], "p string, v int"
     )
-    write_table(base, str(path), ["p"])
+    write_table(base, str(path), Layout("p"))
     before = _files(path / "p=b")
 
     frame = spark.createDataFrame([("a", 10), ("b", 99)], "p string, v int")
-    scoped_overwrite(frame, str(path), "p", ["a"])
+    scoped_overwrite(frame, str(path), Layout("p"), ["a"])
 
     assert _files(path / "p=b") == before
     rows = sorted(map(tuple, read_table(spark, str(path)).select("p", "v").collect()))
@@ -50,19 +51,21 @@ def test_commit_rule_per_mode(spark, tmp_path):
     df = spark.range(6).select((F.col("id") % 2).alias("p"), F.col("id").alias("v"))
     path = str(tmp_path / "t")
 
-    full = write_table(df, path, ["p"], compute_signature=True)
+    full = write_table(df, path, Layout("p"), compute_signature=True)
     assert full["row_count"] == 6 and "snapshot_id" in full
 
-    appended = write_table(df, path, ["p"], mode="append")
+    appended = write_table(df, path, Layout("p"), mode="append")
     assert appended["row_count"] == 12 and appended["rows_written"] == 6
     assert "snapshot_id" not in appended
 
-    scoped = write_table(df.where("p = 0"), path, ["p"], mode="overwrite_partitions")
+    scoped = write_table(
+        df.where("p = 0"), path, Layout("p"), mode="overwrite_partitions"
+    )
     assert scoped["rows_written"] == 3
     assert "row_count" not in scoped and "snapshot_id" not in scoped
     assert read_manifest(path) == scoped
 
     for mode in ("append", "overwrite_partitions"):
         with pytest.raises(ValueError, match="compute_signature"):
-            write_table(df, path, ["p"], mode=mode, compute_signature=True)
+            write_table(df, path, Layout("p"), mode=mode, compute_signature=True)
     assert read_manifest(path) == scoped

@@ -1,9 +1,11 @@
 """Incremental supplement == full rebuild (the H1 equivalence property),
 plus the Structured Streaming wrapper."""
 
+import glob
 import shutil
 import tempfile
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -70,6 +72,15 @@ def test_supplement_equals_full_rebuild(spark, dirs):
         map(tuple, full.tables["pa_groups"].select("mk_hash", "component_id").collect())
     )
     assert groups_inc == groups_full
+    # the layout's in-file sort holds in every file, the partitions the
+    # supplement rewrote included
+    for base in (inc_dir, full_dir):
+        for table in ("evidence", "pa_statements"):
+            files = glob.glob(f"{base}/{table}/*/*.parquet")
+            assert files, (base, table)
+            for f in files:
+                h = pq.read_table(f, columns=["mk_hash"])["mk_hash"].to_pylist()
+                assert h == sorted(h), f
 
 
 def test_supplement_is_idempotent(spark, dirs):
@@ -184,7 +195,7 @@ def test_supplement_preserves_undated_kb_evidence(spark):
 
     from indra_db_spark.operators.dedup import build_evidence
     from indra_db_spark.sources.knowledgebase import load_knowledgebase
-    from indra_db_spark.sources.storage import day, read_table, write_table
+    from indra_db_spark.sources.storage import LAYOUT, read_table, write_table
 
     base = tempfile.mkdtemp(prefix="kg_kb_")
     schema = "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -205,11 +216,13 @@ def test_supplement_preserves_undated_kb_evidence(spark):
              ("Inhibition", "HGNC", "10004", "BRAF", "HGNC", "10007", "MYC")],
         )
         write_table(
-            kb.withColumn("day", day("warc_ts")),
-            f"{base}/raw_statements", ["day"], mode="append",
+            kb, f"{base}/raw_statements", LAYOUT["raw_statements"],
+            mode="append",
         )
         all_raw = read_table(spark, f"{base}/raw_statements").drop("day")
-        write_table(build_evidence(all_raw), f"{base}/evidence", ["day"])
+        write_table(
+            build_evidence(all_raw), f"{base}/evidence", LAYOUT["evidence"]
+        )
         ev0 = read_table(spark, f"{base}/evidence")
         assert ev0.where(F.col("day") == "undated").count() == 2
 
@@ -451,7 +464,9 @@ def test_supplement_rejects_corpus_missing_subj_column(spark):
         path = f"{base}/raw_statements"
         # sever lineage from the very files the overwrite deletes
         doctored = storage.read_table(spark, path).drop("subj").localCheckpoint()
-        storage.write_table(doctored, path, ["day"], mode="overwrite")
+        storage.write_table(
+            doctored, path, storage.LAYOUT["raw_statements"], mode="overwrite"
+        )
         with pytest.raises(ValueError, match="rebuild"):
             supplement_corpus(spark, base, pages,
                               source_expr=synth_source_expr)
@@ -539,7 +554,7 @@ def test_incremental_cc_merges_old_components_bucket_scoped(spark):
         labels = {c for h, c in got if h in set(merged)}
         assert labels == {min(merged)}
         # bucket scoping: only buckets holding a region member were touched
-        from indra_db_spark.pipeline import PA_BUCKETS
+        from indra_db_spark.sources.storage import PA_BUCKETS
 
         region_buckets = {h % PA_BUCKETS for h in merged}
         changed = {

@@ -1,6 +1,6 @@
-"""Every library name the scripts import resolves, and every keyword
-they pass to a library callable is one of its parameters (no Spark
-session).
+"""Every library name the scripts import resolves, every keyword they
+pass to a library callable is one of its parameters, and every library
+attribute they assign to exists (no Spark session).
 
 The scripts in ``tools/`` and ``perfbench/``, ``bench.py`` and
 ``__spark_entry__.py`` import most library names lazily, inside ``main()``
@@ -121,3 +121,31 @@ def test_script_keywords_are_parameters():
                     )
     assert seen > 50, f"only {seen} keywords found — is the walk broken?"
     assert not bad, "keywords that are not parameters:\n" + "\n".join(bad)
+
+
+def test_script_attribute_assignments_exist():
+    """``mod.NAME = …`` on a library name must name an existing
+    attribute: assigning a moved or renamed one silently does nothing."""
+    seen, bad = 0, []
+    for path in SCRIPTS:
+        bound = _library_bindings(path)
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, ast.Attribute) or not isinstance(
+                node.ctx, ast.Store
+            ):
+                continue
+            chain, base = [], node
+            while isinstance(base, ast.Attribute):
+                chain.append(base.attr)
+                base = base.value
+            if not isinstance(base, ast.Name) or base.id not in bound:
+                continue
+            obj = bound[base.id]
+            for attr in reversed(chain[1:]):
+                obj = getattr(obj, attr, None)
+            seen += 1
+            if not hasattr(obj, node.attr):
+                bad.append(f"{path.relative_to(ROOT)}:{node.lineno}: {base.id}"
+                           f".{'.'.join(reversed(chain))}")
+    assert seen >= 2, f"only {seen} assignments found — is the walk broken?"
+    assert not bad, "assignments to missing attributes:\n" + "\n".join(bad)

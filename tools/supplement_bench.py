@@ -125,13 +125,13 @@ def main() -> None:
     n_batch = int(sys.argv[2]) if len(sys.argv) > 2 else 5_000
     pa_buckets = int(sys.argv[3]) if len(sys.argv) > 3 else 256
 
-    from indra_db_spark import pipeline as pipeline_mod
     from indra_db_spark.pipeline import run_pipeline
     from indra_db_spark.session import get_spark
+    from indra_db_spark.sources import storage
     from indra_db_spark.sources.synth import source_expr, synth_pages
     from indra_db_spark.streaming import supplement as supplement_mod
 
-    pipeline_mod.PA_BUCKETS = pa_buckets  # read by pipeline.bucket at call time
+    storage.PA_BUCKETS = pa_buckets  # read by storage.bucket at call time
 
     spark = get_spark(app_name="supplement_bench")
     shm = "/dev/shm" if os.path.isdir("/dev/shm") else "/tmp"
