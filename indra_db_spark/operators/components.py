@@ -30,6 +30,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+# Round cap: O(log² n) rounds are expected, and refinement forests take ~2
+MAX_ROUNDS = 20
+
 
 def _large_star(e: DataFrame) -> DataFrame:
     sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
@@ -86,7 +89,6 @@ def _is_star_forest(e: DataFrame) -> bool:
 
 def connected_components(
     edges: DataFrame, src: str = "supported_mk_hash", dst: str = "supporting_mk_hash",
-    max_iter: int = 20,
     checkpoint: str = "local",
     checkpoint_dir: str | None = None,
     stats: dict | None = None,
@@ -160,7 +162,7 @@ def connected_components(
     converged = False
     prev_sig = init_sig
     prev_count_changed = True  # init counts as a "change" (arms the test)
-    for i in range(max_iter):
+    for i in range(MAX_ROUNDS):
         e, sig = round_ckpt(_small_star(_large_star(e)))
         if stats is not None:
             stats["rounds"] = i + 1
@@ -193,8 +195,9 @@ def connected_components(
         # several conflicting component_ids and every downstream join
         # would silently fan out. Fail loudly instead.
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"(edges={n_edges}); raise max_iter (O(log² n) expected)"
+            f"connected_components did not converge in {MAX_ROUNDS} rounds "
+            f"(edges={n_edges}); raise components.MAX_ROUNDS "
+            "(O(log² n) expected)"
         )
     # Converged star forest: every edge points node → root.
     roots = e.select(F.col("u").alias("mk_hash"), F.col("v").alias("component_id"))

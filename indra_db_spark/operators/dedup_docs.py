@@ -577,6 +577,45 @@ def hamming_distance(a, b):
     return F.bit_count(a.bitwiseXOR(b))
 
 
+def jaccard_residual(
+    cands: DataFrame, docs: DataFrame, id_col: str, text_col: str, k: int,
+    threshold: float,
+) -> DataFrame:
+    """The (doc_a, doc_b) candidate pairs whose exact shingle Jaccard is
+    ≥ ``threshold`` — the precision-1 residual after an LSH candidate
+    stage. Two equi-joins onto per-doc shingle sets of ``docs`` and a
+    per-row array intersect/union: never the all-pairs shared-shingle
+    join the LSH exists to avoid."""
+    # word_shingles renames the id to 'doc_id' — group on that, not on
+    # the caller's id_col (a non-default id_col crashed here)
+    sets = (
+        word_shingles(docs, id_col, text_col, k)
+        .groupBy("doc_id")
+        .agg(F.collect_set("shingle").alias("_sh"))
+    )
+    a = sets.select(F.col("doc_id").alias("doc_a"), F.col("_sh").alias("_sa"))
+    b = sets.select(F.col("doc_id").alias("doc_b"), F.col("_sh").alias("_sb"))
+    # merge hint: the per-doc shingle-SET side is arrays of strings —
+    # the optimizer's row-size estimate for aggregated array columns
+    # undershoots badly, and a mis-chosen broadcast build collects
+    # gigabytes to the driver at corpus scale (observed at 8M docs).
+    return (
+        cands.select("doc_a", "doc_b")
+        .join(a.hint("merge"), "doc_a")
+        .join(b.hint("merge"), "doc_b")
+        .withColumn(
+            "_jac",
+            F.round(
+                F.size(F.array_intersect("_sa", "_sb"))
+                / F.size(F.array_union("_sa", "_sb")),
+                6,
+            ),
+        )
+        .where(F.col("_jac") >= threshold)
+        .select("doc_a", "doc_b")
+    )
+
+
 def dedup_clusters(
     df: DataFrame,
     method: str = "minhash_lsh",
@@ -644,37 +683,7 @@ def dedup_clusters(
         pairs = jaccard_pairs(df, id_col=id_col, text_col=text_col, k=k, threshold=threshold)
     elif method == "minhash_lsh":
         cands = minhash_lsh_candidates(df, id_col, text_col, k=k, **lsh_params)
-        # Jaccard residual keeps precision 1, computed ONLY on the LSH
-        # candidate pairs (two equi-joins onto per-doc shingle sets +
-        # per-row array intersect/union — never the all-pairs
-        # shared-shingle join the LSH exists to avoid).
-        # word_shingles renames the id to 'doc_id' — group on that, not
-        # on the caller's id_col (a non-default id_col crashed here)
-        sets = (
-            word_shingles(df, id_col, text_col, k)
-            .groupBy("doc_id")
-            .agg(F.collect_set("shingle").alias("_sh"))
-        )
-        a = sets.select(F.col("doc_id").alias("doc_a"), F.col("_sh").alias("_sa"))
-        b = sets.select(F.col("doc_id").alias("doc_b"), F.col("_sh").alias("_sb"))
-        # merge hint: the per-doc shingle-SET side is arrays of strings —
-        # the optimizer's row-size estimate for aggregated array columns
-        # undershoots badly, and a mis-chosen broadcast build collects
-        # gigabytes to the driver at corpus scale (observed at 8M docs).
-        scored = (
-            cands.select("doc_a", "doc_b")
-            .join(a.hint("merge"), "doc_a")
-            .join(b.hint("merge"), "doc_b")
-            .withColumn(
-                "_jac",
-                F.round(
-                    F.size(F.array_intersect("_sa", "_sb"))
-                    / F.size(F.array_union("_sa", "_sb")),
-                    6,
-                ),
-            )
-        )
-        pairs = scored.where(F.col("_jac") >= threshold).select("doc_a", "doc_b")
+        pairs = jaccard_residual(cands, df, id_col, text_col, k, threshold)
     else:
         raise ValueError(f"unknown method {method!r}")
     cc = connected_components(pairs, src="doc_a", dst="doc_b")

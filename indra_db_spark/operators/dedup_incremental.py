@@ -70,7 +70,7 @@ from pyspark.sql import functions as F
 from indra_db_spark.functions.hashing import fold_md5_64
 from indra_db_spark.functions.textnorm import collapse_ws_expr
 from indra_db_spark.operators.components import connected_components
-from indra_db_spark.operators.dedup_docs import banded_signatures, word_shingles
+from indra_db_spark.operators.dedup_docs import banded_signatures, jaccard_residual
 
 
 @dataclass(frozen=True)
@@ -169,14 +169,6 @@ def build_dedup_index(
     )
 
 
-def _shingle_sets(df: DataFrame, k: int) -> DataFrame:
-    return (
-        word_shingles(df, "doc_id", "text", k)
-        .groupBy("doc_id")
-        .agg(F.collect_set("shingle").alias("_sh"))
-    )
-
-
 def supplement_dedup_clusters(
     index: DedupIndex,
     old_clusters: DataFrame,
@@ -268,23 +260,7 @@ def supplement_dedup_clusters(
     ).join(F.broadcast(cand_ids), "doc_id", "left_semi").unionByName(
         b.join(F.broadcast(cand_ids), "doc_id", "left_semi")
     )
-    sets = _shingle_sets(cand_docs, k)
-    sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("_sh").alias("_sa"))
-    sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("_sh").alias("_sb"))
-    residual = (
-        cands.join(sa.hint("merge"), "doc_a")
-        .join(sb.hint("merge"), "doc_b")
-        .withColumn(
-            "_jac",
-            F.round(
-                F.size(F.array_intersect("_sa", "_sb"))
-                / F.size(F.array_union("_sa", "_sb")),
-                6,
-            ),
-        )
-        .where(F.col("_jac") >= threshold)
-        .select("doc_a", "doc_b")
-    )
+    residual = jaccard_residual(cands, cand_docs, "doc_id", "text", k, threshold)
 
     edges = intra.unionByName(cross).unionByName(residual).localCheckpoint()
 

@@ -251,11 +251,12 @@ class DedupStore:
 
     # ------------------------------------------------------------------
     # readers (committed state only)
-    def _read_batched(self, table: str, drop_id: bool = True) -> DataFrame:
-        df = storage.read_table(self.spark, self._path(table)).where(
-            F.col("batch_id").isin(self.committed)  # partition-pruned
+    def _read_batched(self, table: str) -> DataFrame:
+        return (
+            storage.read_table(self.spark, self._path(table))
+            .where(F.col("batch_id").isin(self.committed))  # partition-pruned
+            .drop("batch_id")
         )
-        return df.drop("batch_id") if drop_id else df
 
     def docs(self) -> DataFrame:
         self._recover()

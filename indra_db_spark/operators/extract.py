@@ -80,13 +80,18 @@ _MENTION_COLS = T.StructType(
 )
 
 
-def _pattern(lexicon: list[str]) -> re.Pattern:
-    # Longest-first alternation so multi-char names win at shared prefixes.
+def _entities() -> str:
+    # Longest-first alternation over lexicon.LEXICON, so multi-char names
+    # win at shared prefixes.
+    return "|".join(re.escape(e) for e in sorted(LX.LEXICON, key=len, reverse=True))
+
+
+def _pattern() -> re.Pattern:
     # The core pattern starts at the subject entity — keeping a literal
     # alternation at position 0 preserves the regex engine's fast scan
     # (leading optional groups would force per-character backtracking and
     # ~halve extraction throughput, measured).
-    ents = "|".join(re.escape(e) for e in sorted(lexicon, key=len, reverse=True))
+    ents = _entities()
     trig = "|".join(sorted(LX.TRIGGERS, key=len, reverse=True))
     # Trailing \b after the object entity and the residue position keep
     # this consistent with extract_mentions' \b-wrapped entity scan: an
@@ -125,12 +130,9 @@ def _resolve_text(pdf: pd.DataFrame) -> pd.Series:
 
 
 def extract_statements(
-    pages: DataFrame,
-    extractor_version: str = EXTRACTOR_VERSION,
-    lexicon: list[str] | None = None,
+    pages: DataFrame, extractor_version: str = EXTRACTOR_VERSION
 ) -> DataFrame:
     """pages → pre-grounding statement rows (vectorized)."""
-    lex = lexicon or LX.LEXICON
     # html is only consulted when text is NULL (the per-row invariant) —
     # blank it out otherwise so the Arrow exchange doesn't ship the biggest
     # column for ~all rows (the UDF regex itself is microseconds/page; the
@@ -150,7 +152,7 @@ def extract_statements(
     pages = fan_out(pages)
 
     def read_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pat = _pattern(lex)
+        pat = _pattern()
         for pdf in batches:
             en = pdf[pdf["lang"] == "en"]
             if en.empty:
@@ -223,11 +225,10 @@ def extract_statements(
     return pages.mapInPandas(read_batch, _EXTRACTED)
 
 
-def extract_mentions(pages: DataFrame, lexicon: list[str] | None = None) -> DataFrame:
+def extract_mentions(pages: DataFrame) -> DataFrame:
     """pages → entity mentions table (SURVEY.md §8.1 ``mentions``)."""
     from indra_db_spark.functions.hashing import fold_md5_64
 
-    lex = lexicon or LX.LEXICON
     pages = pages.withColumn(
         "html",
         F.when(F.col("text").isNotNull(), F.lit(None).cast("binary")).otherwise(
@@ -236,10 +237,7 @@ def extract_mentions(pages: DataFrame, lexicon: list[str] | None = None) -> Data
     )
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ents = "|".join(
-            re.escape(e) for e in sorted(lex, key=len, reverse=True)
-        )
-        pat = re.compile(rf"\b({ents})\b")
+        pat = re.compile(rf"\b({_entities()})\b")
         for pdf in batches:
             en = pdf[pdf["lang"] == "en"]
             if en.empty:

@@ -67,7 +67,7 @@ def _decode_payload(payload: bytes, kind: str) -> list[float]:
     return [b / 255.0 for b in d[:FEATURE_DIM]]
 
 
-def extract_media_features(media: DataFrame, batch_hint: int = 1024) -> DataFrame:
+def extract_media_features(media: DataFrame) -> DataFrame:
     """media → per-item content features, Arrow-batched.
 
     Partition-preserving (mapInPandas, no shuffle); batches stay bounded by

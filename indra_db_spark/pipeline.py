@@ -18,6 +18,13 @@ raw_statements/evidence are day-partitioned (days(warc_ts) — Iceberg-style
 identity partition on the crawl date); pa tables are bucketed by
 pmod(mk_hash, B) so downstream hash-keyed joins co-locate. Each table's
 layout (partition column and in-file sort) is ``storage.LAYOUT``'s.
+
+The dims (``sources.dims``) and the extractor version
+(``extract.EXTRACTOR_VERSION``) are the code's own, not parameters. A
+stage's fingerprint chains its upstream stage's with what it reads of
+them: the version and the grounding map's rows (raw), the isa closure's
+rows (pa_link) and the priors' rows (belief), hashed on the driver
+(``dims.fingerprints``) — a changed dim reruns exactly its stages.
 """
 
 from __future__ import annotations
@@ -52,15 +59,14 @@ def run_pipeline(
     pages: DataFrame,
     out_dir: str,
     pages_fingerprint: str,
-    grounding_map: DataFrame | None = None,
-    isa_closure: DataFrame | None = None,
-    priors: DataFrame | None = None,
-    extractor_version: str = extract_op.EXTRACTOR_VERSION,
     resume: bool = True,
     signatures: bool = True,
     source_expr=None,
 ) -> PipelineResult:
     """Run (or resume) the full pipeline; all outputs land under out_dir.
+
+    The parameters are what a run varies; the dims and the extractor
+    version are the code's own (module docstring).
 
     ``source_expr``: evidence-source derivation passed to
     ``ground_statements`` (default: url host). Folded into the stage
@@ -75,14 +81,6 @@ def run_pipeline(
     """
     log = LineageLog(out_dir)
     res = PipelineResult()
-
-    grounding_map = (
-        grounding_map if grounding_map is not None else dims_mod.grounding_map_df(spark)
-    )
-    isa_closure = (
-        isa_closure if isa_closure is not None else dims_mod.isa_closure_df(spark)
-    )
-    priors = priors if priors is not None else dims_mod.source_priors_df(spark)
 
     def path(table: str) -> str:
         return f"{out_dir}/{table}"
@@ -123,21 +121,20 @@ def run_pipeline(
     # derivation would silently serve stale raw_statements.
     if source_expr is None:
         source_tag = "host"
+    elif callable(source_expr):
+        source_tag = repr(source_expr(F.col("url")))
     else:
-        try:
-            source_tag = repr(source_expr(F.col("url")))
-        except Exception:
-            source_tag = getattr(source_expr, "__name__", None) or str(source_expr)
-    # Dim inputs are part of every consuming stage's identity: a resumed
+        source_tag = repr(source_expr)
+    # Dim content is part of every consuming stage's identity: a resumed
     # run with a changed grounding map / isa closure / priors must NOT
-    # serve tables computed from the old dims. The dims are tiny — one
-    # content-signature agg each per run.
-    gm_sig = storage._content_signature(grounding_map)[1]
-    isa_sig = storage._content_signature(isa_closure)[1]
-    priors_sig = storage._content_signature(priors)[1]
+    # serve tables computed from the old dims.
+    dim_fp = dims_mod.fingerprints()
+    # read at call time: a version bump is a change to extract.py
+    version = extract_op.EXTRACTOR_VERSION
     # v2: undated pages land in the ``undated`` day partition, not NULL
     fp_raw = fingerprint(
-        "raw", pages_fingerprint, extractor_version, source_tag, gm_sig, "v2"
+        "raw", pages_fingerprint, version, source_tag,
+        dim_fp["grounding_map"], "v2",
     )
     stage = "raw_statements"
     if resume and log.completed(stage, fp_raw):
@@ -160,9 +157,10 @@ def run_pipeline(
             # Fingerprint-invalidated (or first) run: stale per-partition
             # bookkeeping must not survive the full static overwrite below.
             log.clear_stage(stage)
-        extracted = extract_op.extract_statements(work, extractor_version)
         raw = ground_op.ground_statements(
-            extracted, grounding_map, source_expr=source_expr
+            extract_op.extract_statements(work, version),
+            dims_mod.grounding_map_df(spark),
+            source_expr=source_expr,
         )
         # Partial resume uses DYNAMIC PARTITION OVERWRITE, not append: a
         # crash can leave a day with data but no part manifest (mid-write)
@@ -217,11 +215,11 @@ def run_pipeline(
     # ---- stage 3: refinement links (bucketed on the supported hash so
     # the incremental supplement can rewrite only the buckets whose edge
     # set changed — same contract as evidence days / pa buckets)
-    fp_link = fingerprint("link", fp_pa, isa_sig, "v1")
+    fp_link = fingerprint("link", fp_pa, dim_fp["isa_closure"], "v1")
     run_stage(
         "pa_link",
         fp_link,
-        lambda: {"pa_link": refine_op.build_pa_link(pa_base, isa_closure)},
+        lambda: {"pa_link": refine_op.build_pa_link(pa_base, dims_mod.isa_closure_df(spark))},
         ["pa_link"],
     )
     pa_link = res.tables["pa_link"]
@@ -241,11 +239,15 @@ def run_pipeline(
     )
 
     # ---- stage 5: belief → final pa_statements
-    fp_belief = fingerprint("belief", fp_link, priors_sig, "v1")
+    fp_belief = fingerprint("belief", fp_link, dim_fp["source_priors"], "v1")
     run_stage(
         "belief",
         fp_belief,
-        lambda: {"pa_statements": belief_op.with_belief(pa_base, pa_link, priors)},
+        lambda: {
+            "pa_statements": belief_op.with_belief(
+                pa_base, pa_link, dims_mod.source_priors_df(spark)
+            )
+        },
         ["pa_statements"],
     )
     pa_final = res.tables["pa_statements"]

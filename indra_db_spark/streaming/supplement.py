@@ -120,22 +120,14 @@ def supplement_corpus(
     spark: SparkSession,
     out_dir: str,
     new_pages: DataFrame,
-    grounding_map: DataFrame | None = None,
-    isa_closure: DataFrame | None = None,
-    priors: DataFrame | None = None,
-    extractor_version: str = extract_op.EXTRACTOR_VERSION,
     source_expr=None,
 ) -> dict[str, DataFrame]:
     """Merge new pages into the corpus at ``out_dir`` (built by
-    pipeline.run_pipeline). Returns the updated tables."""
-    grounding_map = (
-        grounding_map if grounding_map is not None else dims_mod.grounding_map_df(spark)
-    )
-    isa_closure = (
-        isa_closure if isa_closure is not None else dims_mod.isa_closure_df(spark)
-    )
-    priors = priors if priors is not None else dims_mod.source_priors_df(spark)
+    pipeline.run_pipeline). Returns the updated tables.
 
+    As in ``run_pipeline``, the dims and the extractor version are the
+    code's own (``sources.dims``, ``extract.EXTRACTOR_VERSION``, read at
+    call time); ``source_expr`` must be the build's."""
     _require_current_layout(spark, out_dir)  # pre-r3 corpus → rebuild
     path = lambda t: f"{out_dir}/{t}"
     old_raw = storage.read_table(spark, path("raw_statements")).drop("day")
@@ -165,8 +157,8 @@ def supplement_corpus(
         spark, path("raw_statements")
     ).where(F.col("day").isin(batch_days))
     grounded = ground_op.ground_statements(
-        extract_op.extract_statements(new_pages, extractor_version),
-        grounding_map,
+        extract_op.extract_statements(new_pages, extract_op.EXTRACTOR_VERSION),
+        dims_mod.grounding_map_df(spark),
         source_expr=source_expr,
     )
     new_raw = (
@@ -285,6 +277,7 @@ def supplement_corpus(
     # 5. refinement: recompute edges touching affected only. Both joins put
     # the affected set on one side — never a full corpus self-join.
     aff_pa = merged_pa_base.join(affected, "mk_hash", "left_semi")
+    isa_closure = dims_mod.isa_closure_df(spark)
     links_spec_aff = refine_op.build_pa_link_restricted(
         specific=aff_pa, general=merged_pa_base, isa_closure=isa_closure
     )
@@ -329,6 +322,7 @@ def supplement_corpus(
     belief_scope = merged_pa_base.join(
         dirty.unionByName(supporters).distinct(), "mk_hash", "left_semi"
     )
+    priors = dims_mod.source_priors_df(spark)
     new_belief = belief_op.compute_belief(belief_scope, dirty_links, priors).join(
         dirty, "mk_hash", "left_semi"
     )

@@ -1,8 +1,10 @@
 """The broadcast dims are JVM-local relations with pinned content.
 
 Each default dim must plan as a ``LocalRelation`` (so scanning it starts no
-Python worker) and keep the content signature that the stage fingerprints
-of existing corpora were computed from, or those corpora stop resuming.
+Python worker) and keep its pinned content signature. The stage
+fingerprints hash the dims' driver rows (``dims.fingerprints``), not this
+signature, so the pin guards the dims' content: a changed row is a
+deliberate edit of the resources every build grounds against.
 """
 
 import pytest
@@ -14,8 +16,7 @@ from indra_db_spark.sources import dims
 from indra_db_spark.sources import lexicon as LX
 from indra_db_spark.sources.storage import _content_signature
 
-# (dim builder, its lexicon rows, content signature at the time the
-# pipeline's fingerprints first hashed it)
+# (dim builder, its lexicon rows, pinned content signature)
 DIMS = {
     "grounding_map": (
         dims.grounding_map_df, LX.grounding_rows, (62, 17219892736440087398)

@@ -7,6 +7,7 @@ import shutil
 import tempfile
 
 from indra_db_spark.pipeline import run_pipeline
+from indra_db_spark.sources import lexicon as LX
 from indra_db_spark.sources.storage import read_manifest
 from indra_db_spark.sources.synth import source_expr as synth_source_expr, synth_pages
 
@@ -42,6 +43,29 @@ def test_rerun_is_noop_and_partition_manifests_exist(spark):
         assert read_manifest(f"{out}/pa_statements")["snapshot_id"] == snap1
     finally:
         shutil.rmtree(out, ignore_errors=True)
+
+
+def test_dim_change_invalidates_exactly_its_stages(spark, tmp_path, monkeypatch):
+    """The stage fingerprints hash each dim's driver rows: a changed
+    prior recomputes belief and meta only, a changed grounding row every
+    stage, and unchanged dims resume everything."""
+    out = str(tmp_path / "kg")
+    _run(spark, out)
+    assert len(_run(spark, out).skipped) == 6
+    snap = read_manifest(f"{out}/pa_statements")["snapshot_id"]
+
+    priors = LX.prior_rows()
+    priors[0] = (priors[0][0], 0.5, priors[0][2])
+    monkeypatch.setattr(LX, "prior_rows", lambda: priors)
+    r = _run(spark, out)
+    assert r.skipped == ["raw_statements", "pa_base", "pa_link", "components"]
+    # the recomputed beliefs are the new prior's, not the old corpus's
+    assert read_manifest(f"{out}/pa_statements")["snapshot_id"] != snap
+
+    grounding = LX.grounding_rows()
+    grounding[0] = grounding[0][:3] + ("RENAMED",) + grounding[0][4:]
+    monkeypatch.setattr(LX, "grounding_rows", lambda: grounding)
+    assert _run(spark, out).skipped == []
 
 
 def test_mid_stage_partition_resume(spark):
@@ -168,6 +192,16 @@ def test_changed_source_expr_invalidates(spark, tmp_path):
     r3 = run_pipeline(spark, pages, out, pages_fingerprint="v60",
                       source_expr=lambda u: F.lit("beta"))
     assert "raw_statements" in r3.skipped
+    # a Column is tagged by its own expression: a different Column
+    # invalidates, the same Column resumes
+    r4 = run_pipeline(spark, pages, out, pages_fingerprint="v60",
+                      source_expr=F.lit("gamma"))
+    assert "raw_statements" not in r4.skipped
+    srcs = {r["source"] for r in r4.tables["raw_statements"].select("source").distinct().collect()}
+    assert srcs == {"gamma"}
+    r5 = run_pipeline(spark, pages, out, pages_fingerprint="v60",
+                      source_expr=F.lit("gamma"))
+    assert "raw_statements" in r5.skipped
 
 
 def test_torn_manifest_means_uncommitted(spark, tmp_path):

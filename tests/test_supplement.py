@@ -9,6 +9,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from indra_db_spark.operators import extract as extract_op
 from indra_db_spark.pipeline import run_pipeline
 from indra_db_spark.sources.synth import source_expr as synth_source_expr, synth_pages
 from indra_db_spark.streaming.supplement import supplement_corpus
@@ -99,7 +100,7 @@ def test_supplement_is_idempotent(spark, dirs):
     assert _pa_snapshot(tables["pa_statements"]) == before
 
 
-def test_supplement_rewrites_only_affected_evidence_partitions(spark):
+def test_supplement_rewrites_only_affected_evidence_partitions(spark, monkeypatch):
     """evidence is day-partitioned (SURVEY §8.1 days(warc_ts)); a
     supplement touching one crawl day must leave every other day
     partition's files byte-identical — the shim analog of an Iceberg
@@ -152,7 +153,8 @@ def test_supplement_rewrites_only_affected_evidence_partitions(spark):
               "AKT1GEN phosphorylates MTORGEN.", "en")],
             schema,
         )
-        tables = supplement_corpus(spark, base, reread, extractor_version="3.0",
+        monkeypatch.setattr(extract_op, "EXTRACTOR_VERSION", "3.0")
+        tables = supplement_corpus(spark, base, reread,
                                    source_expr=synth_source_expr)
         # untouched partitions: identical content AND mtime (not rewritten)
         assert snap("evidence/day=2024-03-01") == before1
@@ -184,7 +186,7 @@ def test_supplement_rewrites_only_affected_evidence_partitions(spark):
         shutil.rmtree(base, ignore_errors=True)
 
 
-def test_supplement_preserves_undated_kb_evidence(spark):
+def test_supplement_preserves_undated_kb_evidence(spark, monkeypatch):
     """Null-warc_ts (knowledgebase) evidence lands in the literal
     'undated' partition — when a supplement affects a KB-co-sourced hash,
     the undated partition is rewritten WITH its unaffected rows kept (a
@@ -232,7 +234,8 @@ def test_supplement_preserves_undated_kb_evidence(spark):
               "EGFRGEN inhibits KRASGEN.", "en")],
             schema,
         )
-        tables = supplement_corpus(spark, base, reread, extractor_version="3.0",
+        monkeypatch.setattr(extract_op, "EXTRACTOR_VERSION", "3.0")
+        tables = supplement_corpus(spark, base, reread,
                                    source_expr=synth_source_expr)
         ev = tables["evidence"]
         und = {r["source"]: r["evidence_text"]
@@ -334,7 +337,7 @@ def test_streaming_wrapper(spark):
         shutil.rmtree(base, ignore_errors=True)
 
 
-def test_version_bump_supersedes_evidence(spark):
+def test_version_bump_supersedes_evidence(spark, monkeypatch):
     """A supplement batch re-reading urls at a HIGHER extractor version
     supersedes the old readings: pa_statements AND evidence match a full
     rebuild over the mixed-version raw log (the append-only evidence bug:
@@ -355,9 +358,9 @@ def test_version_bump_supersedes_evidence(spark):
                      source_expr=synth_source_expr)
         doc_idx = F.regexp_extract("url", r"doc/(\d+)", 1).cast("long")
         reread = pages.where(doc_idx >= 40)  # re-read half at a new version
+        monkeypatch.setattr(extract_op, "EXTRACTOR_VERSION", "3.0")
         tables = supplement_corpus(
-            spark, base, reread, extractor_version="3.0",
-            source_expr=synth_source_expr,
+            spark, base, reread, source_expr=synth_source_expr
         )
 
         # expected: mixed-version raw log -> distill -> pa/evidence

@@ -149,3 +149,39 @@ def test_script_attribute_assignments_exist():
                            f".{'.'.join(reversed(chain))}")
     assert seen >= 2, f"only {seen} assignments found — is the walk broken?"
     assert not bad, "assignments to missing attributes:\n" + "\n".join(bad)
+
+
+def test_entry_point_parameters_have_callers():
+    """Every parameter of the two corpus entry points is passed, by
+    position or keyword, by at least one call outside ``tests/``: a
+    parameter no caller sets is a knob with no use. A ``**kwargs``
+    pass-through (``stream.py``) names no parameter, so it counts for
+    none."""
+    from indra_db_spark.pipeline import run_pipeline
+    from indra_db_spark.streaming.supplement import supplement_corpus
+
+    passed = {run_pipeline: set(), supplement_corpus: set()}
+    calls = 0
+    for path in [*SCRIPTS, *sorted(ROOT.glob("indra_db_spark/**/*.py"))]:
+        bound = _library_bindings(path)
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = _callee(node.func, bound)
+            if fn not in passed:
+                continue
+            calls += 1
+            names = list(inspect.signature(fn).parameters)
+            for name, arg in zip(names, node.args):
+                if isinstance(arg, ast.Starred):
+                    break
+                passed[fn].add(name)
+            passed[fn].update(kw.arg for kw in node.keywords if kw.arg)
+    assert calls >= 5, f"only {calls} entry-point calls found — is the walk broken?"
+    unused = [
+        f"{fn.__qualname__}({name})"
+        for fn, seen in passed.items()
+        for name in inspect.signature(fn).parameters
+        if name not in seen
+    ]
+    assert not unused, "parameters no caller passes:\n" + "\n".join(unused)
