@@ -48,6 +48,7 @@ from indra_db_spark.plans.query import (
     Not,
     Query,
     QueryContext,
+    pack_evidence,
 )
 
 _RESULT_PARAMS = {"limit", "offset", "ev_limit", "sort_by", "after"}
@@ -154,22 +155,26 @@ def _parse_after(v: Any) -> tuple:
 def load_context(spark, out_dir: str, bucketed: bool = False) -> QueryContext:
     """Pipeline output dir → serving ``QueryContext``.
 
-    ``bucketed=True`` re-registers pa_statements and evidence as
-    mk_hash-bucketed session-catalog tables (the Iceberg
-    ``bucket(N, mk_hash)`` analog, via storage.write_bucketed_table) —
-    the analog of the reference's pg_restore-into-the-serving-instance
-    swap ([P] cli/dump.py): one materialization per corpus publish, after
-    which EVERY serving query's mk_hash machinery (evidence hydration
-    join, ev_limit window, the evidences groupBy) reads pre-clustered
-    buckets with no Exchange (asserted in tests/test_bucketing.py).
-    Each table is published as one file per non-empty bucket, so a
-    lookup on a page of hashes opens only those hashes' buckets; the
-    bucket count is also the publish step's write parallelism.
-    Catalog names carry a short hash of the resolved ``out_dir``
-    (``pa_statements_srv_<h8>``) so two bucketed contexts for different
+    ``bucketed=True`` publishes ONE serving table: pa_statements left
+    joined to ``pack_evidence(evidence)``, so each row carries its
+    ``evidences`` array already in serving order, registered as an
+    mk_hash-bucketed session-catalog table (the Iceberg
+    ``bucket(N, mk_hash)`` analog, via storage.write_bucketed_table).
+    This is the analog of the reference's pg_restore-into-the-serving-
+    instance swap ([P] cli/dump.py) into its evidence-fetch table
+    ([P] readonly_schema.py::FastRawPaLink): one materialization per
+    corpus publish, after which a ``/statements`` page is one
+    bucket-pruned scan with no per-request join, window or aggregate.
+    The table is one file per non-empty bucket, so a lookup on a page of
+    hashes opens only those hashes' buckets; the bucket count is also
+    the publish step's write parallelism. ``evidence`` stays the corpus's
+    day-partitioned table: only the url lookups (``FromPapers``,
+    ``FromTopics``) read it, so evidence is not stored twice.
+    The catalog name carries a short hash of the resolved ``out_dir``
+    (``pa_statements_srv_<h8>``) so two published contexts for different
     corpora can coexist in one session without silently repointing each
     other's tables (ADVICE r3); re-loading the SAME out_dir reuses its
-    names (idempotent republish).
+    name (idempotent republish).
 
     The pipeline itself stays on the directory-partitioned shim: its own
     stages join on generalized agent keys (refine) or aggregate on
@@ -186,12 +191,13 @@ def load_context(spark, out_dir: str, bucketed: bool = False) -> QueryContext:
     ev = storage.read_table(spark, f"{out_dir}/evidence")
     if bucketed:
         h8 = hashlib.md5(os.path.abspath(out_dir).encode()).hexdigest()[:8]
-        pa_name = f"pa_statements_srv_{h8}"
-        ev_name = f"evidence_srv_{h8}"
-        storage.write_bucketed_table(pa, pa_name, path=f"{out_dir}/_srv/pa")
-        storage.write_bucketed_table(ev, ev_name, path=f"{out_dir}/_srv/ev")
-        pa = spark.table(pa_name)
-        ev = spark.table(ev_name)
+        name = f"pa_statements_srv_{h8}"
+        storage.write_bucketed_table(
+            pa.join(pack_evidence(ev), "mk_hash", "left"),
+            name,
+            path=f"{out_dir}/_srv/pa",
+        )
+        pa = spark.table(name)
     return QueryContext(pa_statements=pa, evidence=ev)
 
 

@@ -31,10 +31,10 @@ starts from it.
 
 Serving is two-phase, as in the reference client: ``Query.page(ctx)``
 orders and paginates the matching rows, and a limited
-``get_statements`` collects that page's mk_hashes first, then hydrates
-it by hash lookups (``mk_hash IN page``) on pa_statements and evidence —
-O(page) work on mk_hash-bucketed tables, whose scans prune to the
-page's buckets.
+``get_statements`` collects that page's mk_hashes first, then fetches
+it by one hash lookup (``mk_hash IN page``) on pa_statements — O(page)
+work on the published mk_hash-bucketed table, whose rows already carry
+their packed evidence and whose scan prunes to the page's buckets.
 
 Every leaf is also **invertible** (reference: Query._inverted), and
 get_statements supports sort_by/limit/offset (W4) + ev_limit (W2).
@@ -50,6 +50,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from indra_db_spark.functions.hashing import agent_key
+from indra_db_spark.functions.literals import in_longs
 from indra_db_spark.operators.meta import KB_PREFIX
 
 # Statement-type hierarchy (indra.statements class tree, the subset this
@@ -111,6 +112,35 @@ class QueryContext:
     page_topics: DataFrame | None = None  # (url, topic_id) — MeSH-term analog
     page_concepts: DataFrame | None = None  # (url, topic_id) — MeSH-concept analog
     curations: DataFrame | None = None  # Curation-table analog
+
+
+def pack_evidence(evidence: DataFrame) -> DataFrame:
+    """(mk_hash, evidences): each statement's evidence rows as one array
+    in serving order, richest first ([P] query.py::Query.get_statements
+    returns richest evidence first): longer evidence text ranks higher
+    (the fulltext>abstract>title analog in the pages model), raw_id breaks
+    ties deterministically. ``slice(evidences, 1, k)`` is therefore the
+    statement's best k evidences."""
+    # sort on a leading (-text_length, raw_id) key, then strip it —
+    # array_sort on the bare struct would order by raw_id, i.e. by a hash
+    ev_struct = F.struct(
+        (-F.length("evidence_text")).alias("_neg_len"),
+        F.col("raw_id"),
+        F.col("url"),
+        F.col("source"),
+        F.col("evidence_text"),
+    )
+    return evidence.groupBy("mk_hash").agg(
+        F.transform(
+            F.array_sort(F.collect_list(ev_struct)),
+            lambda e: F.struct(
+                e["raw_id"].alias("raw_id"),
+                e["url"].alias("url"),
+                e["source"].alias("source"),
+                e["evidence_text"].alias("evidence_text"),
+            ),
+        ).alias("evidences")
+    )
 
 
 class Query:
@@ -205,68 +235,47 @@ class Query:
         """Hydrated statements (+ evidences array, ev_limit-truncated) of
         ``page(ctx, sort_by, limit, offset, after)``.
 
-        Scale shape: evidence is narrowed to the page's hashes **before**
-        the ev_limit window + collect_list — hydrating 25 statements must
-        never shuffle the full evidence table (reference: [P]
-        client/readonly/query.py::Query.get_statements chooses the page of
-        hashes, then fetches evidence for exactly those hashes).
-
         With a ``limit`` (the server always sets one) the page is selected
         **at call time**: one job collects its ≤ ``limit`` mk_hashes, and
-        the result is built from ``pa_statements`` and ``evidence`` each
-        filtered on that literal hash set — a filter pushed into both
-        scans, which on mk_hash-bucketed tables also prunes to the page's
-        buckets. Without a limit the result stays lazy: evidence is
-        semi-joined on the selection's hash set.
+        the result is ``pa_statements`` filtered on that literal hash set —
+        a filter pushed into the scan, which on the mk_hash-bucketed
+        published table also prunes to the page's buckets. Without a
+        limit the result stays lazy.
+
+        A published context (``api.load_context(bucketed=True)``) stores
+        each statement's ``evidences`` array on its pa_statements row,
+        already in serving order, so a page is one scan: no join,
+        aggregate or window per request (the reference's readonly
+        ``fast_raw_pa_link`` is likewise denormalized for evidence fetch).
+        Any other context has no ``evidences`` column; its evidence is
+        narrowed to the selection (the same hash set, or a semi-join
+        without a limit) **before** it is packed and joined, so
+        hydrating 25 statements never shuffles the full evidence table.
+        ``ev_limit`` keeps the first ``ev_limit`` evidences of the array
+        (the richest), and ``ev_limit <= 0`` none: ``evidences`` is NULL.
         """
         stmts = self.page(ctx, sort_by, limit, offset, after)
         if limit is not None:
-            page = [r["mk_hash"] for r in stmts.select("mk_hash").collect()]
-            stmts = ctx.pa_statements.where(F.col("mk_hash").isin(page))
-            ev = ctx.evidence.where(F.col("mk_hash").isin(page))
-        else:
-            ev = ctx.evidence.join(stmts.select("mk_hash"), "mk_hash", "left_semi")
-        if ev_limit is not None:
-            # best-evidence-first truncation ([P] query.py::Query
-            # .get_statements returns richest evidence first): longer
-            # evidence text ranks higher (the fulltext>abstract>title
-            # analog in the pages model), raw_id breaks ties
-            # deterministically.
-            w = Window.partitionBy("mk_hash").orderBy(
-                F.desc(F.length("evidence_text")), F.asc("raw_id")
+            in_page = in_longs(
+                "mk_hash", [r["mk_hash"] for r in stmts.select("mk_hash").collect()]
             )
-            ev = ev.withColumn("_rn", F.row_number().over(w)).where(
-                F.col("_rn") <= ev_limit
-            ).drop("_rn")
-        # richest-evidence-first INSIDE the array too (the reference
-        # contract): sort on a leading (-text_length, raw_id) key, then
-        # strip it — array_sort on the bare struct would order by raw_id,
-        # i.e. by a hash.
-        ev_struct = F.struct(
-            (-F.length("evidence_text")).alias("_neg_len"),
-            F.col("raw_id"),
-            F.col("url"),
-            F.col("source"),
-            F.col("evidence_text"),
-        )
-        ev_packed = ev.groupBy("mk_hash").agg(
-            F.transform(
-                F.array_sort(F.collect_list(ev_struct)),
-                lambda e: F.struct(
-                    e["raw_id"].alias("raw_id"),
-                    e["url"].alias("url"),
-                    e["source"].alias("source"),
-                    e["evidence_text"].alias("evidence_text"),
-                ),
-            ).alias("evidences")
-        )
-        # The hydration join does NOT preserve the pre-join sort (at scale
-        # it plans as a SortMergeJoin keyed on mk_hash) — re-apply the
-        # output order after the join so the serving contract holds
-        # regardless of the chosen physical join.
-        return stmts.join(ev_packed, "mk_hash", "left").orderBy(
-            F.desc(sort_by), F.asc("mk_hash")
-        )
+            stmts = ctx.pa_statements.where(in_page)
+        if "evidences" not in stmts.columns:
+            ev = (
+                ctx.evidence.where(in_page) if limit is not None
+                else ctx.evidence.join(stmts.select("mk_hash"), "mk_hash", "left_semi")
+            )
+            stmts = stmts.join(pack_evidence(ev), "mk_hash", "left")
+        if ev_limit is not None:
+            stmts = stmts.withColumn(
+                "evidences",
+                F.slice("evidences", 1, ev_limit) if ev_limit > 0
+                else F.lit(None).cast(stmts.schema["evidences"].dataType),
+            )
+        # a join does NOT preserve the page's sort (at scale it plans as a
+        # SortMergeJoin keyed on mk_hash), nor does the hash lookup — apply
+        # the output order last so the serving contract holds on every path
+        return stmts.orderBy(F.desc(sort_by), F.asc("mk_hash"))
 
     def get_statements_json(self, ctx: QueryContext, **kwargs) -> DataFrame:
         """(mk_hash, stmt_json) — the reference's JSON payload edge.
@@ -411,7 +420,7 @@ class HasHash(Query):
     hashes_list: list[int] = field(default_factory=list)
 
     def predicate(self) -> Column:
-        return F.col("mk_hash").isin(self.hashes_list)
+        return in_longs("mk_hash", self.hashes_list)
 
 
 @dataclass

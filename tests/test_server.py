@@ -165,6 +165,7 @@ def _guard_params(ctx):
         for r in ctx.evidence.select("url").distinct().orderBy("url").limit(2).collect()
     ]
     first = run_query({"agent": "TP53", "limit": 5}, ctx).collect()
+    most = ctx.evidence.groupBy("mk_hash").count().agg(F.max("count")).first()[0]
     return [
         {"subject": "TP53", "limit": 20},
         {"agent": "11998@HGNC", "limit": 20},
@@ -176,6 +177,9 @@ def _guard_params(ctx):
         {"agent": "TP53", "limit": 5,
          "after": f"{first[-1]['ev_count']},{first[-1]['mk_hash']}"},
         {"agent": "TP53", "limit": 5, "offset": 3, "ev_limit": 1},
+        {"agent": "TP53", "limit": 5, "ev_limit": 0},
+        {"agent": "TP53", "limit": 5, "ev_limit": -1},
+        {"agent": "TP53", "limit": 5, "ev_limit": most + 1},
     ]
 
 
@@ -209,3 +213,46 @@ def test_empty_page(contexts):
         assert empty.collect() == [] and empty.schema == page.schema
         for route in ("/statements", "/statements/json"):
             assert handle_request(f"{route}?agent=NOSUCHGENE", c) == (200, b"[]")
+
+
+def _rows(df):
+    return sorted(json.dumps(r.asDict(recursive=True), sort_keys=True) for r in df.collect())
+
+
+def test_unlimited_run_query_same_on_both_contexts(contexts):
+    """The lazy no-limit library call: evidence semi-joined and packed on
+    the plain context, read off the packed rows on the published one."""
+    params = {"agent": "TP53", "ev_limit": 2}
+    plain = _rows(run_query(params, contexts["plain"]))
+    assert plain
+    assert _rows(run_query(params, contexts["bucketed"])) == plain
+
+
+def test_ev_limit_keeps_richest_evidence(contexts, ctx):
+    """``ev_limit=k`` keeps each statement's k evidences with the longest
+    text, raw_id breaking ties — checked against the evidence rows."""
+    by_hash: dict = {}
+    for r in ctx.evidence.select("mk_hash", "raw_id", "evidence_text").collect():
+        by_hash.setdefault(r["mk_hash"], []).append(r)
+    for c in contexts.values():
+        rows = run_query({"agent": "TP53", "limit": 20, "ev_limit": 2}, c).collect()
+        assert rows
+        for r in rows:
+            best = sorted(by_hash[r["mk_hash"]], key=lambda e: (-len(e["evidence_text"]), e["raw_id"]))
+            assert [e["raw_id"] for e in r["evidences"]] == [e["raw_id"] for e in best[:2]]
+
+
+def test_published_page_runs_two_jobs(spark, contexts):
+    """A limited /statements request on a published context is two Spark
+    jobs: the page selection and the packed-row fetch."""
+    sc = spark.sparkContext
+    try:
+        for i in range(2):  # the first request warms nothing the second needs
+            group = f"published-page-{i}"
+            sc.setJobGroup(group, group)
+            code, _ = handle_request("/statements?agent=TP53&limit=20&ev_limit=2", contexts["bucketed"])
+            assert code == 200
+            assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
